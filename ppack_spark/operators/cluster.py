@@ -34,26 +34,10 @@ plan but exact on fixture-sized inputs (plans/registry_data.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import cut_lineage
-
-# Below this many (deduplicated, oriented) edges the kernels solve the
-# graph with a driver-side union-find instead of iterative Spark
-# rounds: a KB-to-MB edge list costs 3-6 distributed rounds of
-# checkpoint + aggregate jobs (~1s of pure scheduling each at local
-# parallelism; worse on a real cluster) while path-compressed
-# union-find finishes in milliseconds. 200k edges ≈ a few MB collected
-# — comparable to the EM pattern-count collect the reference itself
-# mandates, and far below any driver limit. Above the bound (any real
-# 100 TB dedup graph) the distributed kernels run exactly as before;
-# the decision input is the edge COUNT the star kernel already
-# computes for its convergence signature. Override with
-# PPACK_CC_DRIVER_MAX_EDGES (0 disables the driver path).
-_CC_DRIVER_MAX_EDGES = int(os.environ.get("PPACK_CC_DRIVER_MAX_EDGES", "200000"))
+from .util import bounded_collect, cut_lineage
 
 __all__ = [
     "connected_components",
@@ -122,7 +106,6 @@ def connected_components(
     id_left: str = "id_left",
     id_right: str = "id_right",
     max_iter: int = 30,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Resolve undirected edges into components.
 
@@ -131,11 +114,11 @@ def connected_components(
     at least one edge are returned (singletons are their own component
     by definition and need no resolution).
 
-    ``small_graph_edges`` (default: the module bound, env
-    ``PPACK_CC_DRIVER_MAX_EDGES``; pass 0 to disable): edge sets at or
-    below the bound are solved with the driver union-find
-    (:func:`_driver_components`) instead of distributed rounds —
-    identical output, none of the per-round job overhead.
+    Symmetrized edge sets within the driver bound
+    (:func:`~ppack_spark.operators.util.bounded_collect`) are solved
+    with the driver union-find (:func:`_driver_components`) instead of
+    distributed rounds — identical output, none of the per-round job
+    overhead.
     """
     # materialize the narrow edge projection once: the symmetrizing
     # union's two legs (and nothing else) would otherwise each
@@ -145,14 +128,15 @@ def connected_components(
         F.col(id_left).alias("src"), F.col(id_right).alias("dst")
     ).localCheckpoint(eager=False)
     # symmetrize once; propagation then only needs one direction
-    e = raw.unionByName(
-        raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    e = cut_lineage(e)
-
-    bound = _CC_DRIVER_MAX_EDGES if small_graph_edges is None else small_graph_edges
-    if bound and e.count() <= bound:
-        solved = _driver_components(e, nodes=None)
+    e, rows = bounded_collect(
+        raw.unionByName(
+            raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct(),
+        "src",
+        "dst",
+    )
+    if rows is not None:
+        solved = _driver_components(e, rows)
         if solved is not None:
             return solved
 
@@ -237,27 +221,22 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def _driver_components(
-    e: DataFrame, nodes: DataFrame | None
+    e: DataFrame, edges: list, nodes: list | tuple = ()
 ) -> DataFrame | None:
     """Solve a SMALL component graph on the driver: path-compressed
     union-find with union-by-min, so each root is the minimum id seen
     in its tree and the output is exactly the distributed kernels'
-    (node, min-member-id) contract. ``nodes`` (optional) contributes
-    extra isolated nodes beyond the edge endpoints (the star kernel's
-    self-loop-only nodes).
+    (node, min-member-id) contract. ``edges`` are the collected
+    ``(src, dst)`` rows of ``e``; ``nodes`` contributes extra isolated
+    nodes beyond the edge endpoints (the star kernel's self-loop-only
+    nodes).
 
     Returns ``None`` — caller falls back to the distributed kernel —
-    when the id type is outside the safe set (integral/string, where
-    Python ordering provably matches Spark's) or any endpoint is NULL
-    (equi-join NULL semantics are not worth replicating here).
+    when any endpoint is NULL (equi-join NULL semantics are not worth
+    replicating here).
     """
     import pyspark.sql.types as T
 
-    dtype = e.schema["src"].dataType
-    if not isinstance(
-        dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.StringType)
-    ):
-        return None
     parent: dict = {}
 
     def find(x):
@@ -268,14 +247,11 @@ def _driver_components(
             parent[x], x = r, parent[x]
         return r
 
-    if nodes is not None:
-        for row in nodes.collect():
-            v = row[0]
-            if v is None:
-                return None
-            parent.setdefault(v, v)
-    for row in e.collect():
-        a, b = row[0], row[1]
+    for v in nodes:
+        if v is None:
+            return None
+        parent.setdefault(v, v)
+    for a, b in edges:
         if a is None or b is None:
             return None
         if a not in parent:
@@ -288,6 +264,7 @@ def _driver_components(
         if rb < ra:
             ra, rb = rb, ra
         parent[rb] = ra
+    dtype = e.schema["src"].dataType
     rows = [(v, find(v)) for v in parent]
     schema = T.StructType(
         [
@@ -311,7 +288,6 @@ def connected_components_star(
     id_left: str = "id_left",
     id_right: str = "id_right",
     max_iter: int = 50,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -340,25 +316,21 @@ def connected_components_star(
     # _large_star/_small_star passes rely on it to skip their
     # per-round re-orientation/dedup exchanges (see their docstrings);
     # for undirected edges the orientation changes nothing semantically
-    e = (
+    e, rows = bounded_collect(
         raw.select(
             F.greatest(F.col("src"), F.col("dst")).alias("src"),
             F.least(F.col("src"), F.col("dst")).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .transform(cut_lineage)
+        .distinct(),
+        "src",
+        "dst",
     )
-    sig = _edge_signature(e)
-    # the signature's edge count doubles as the driver-path decision
-    # input: small graphs skip the round loop entirely (same output,
-    # see _driver_components; pass small_graph_edges=0 to force the
-    # distributed rounds)
-    bound = _CC_DRIVER_MAX_EDGES if small_graph_edges is None else small_graph_edges
-    if bound and sig[0] <= bound:
-        solved = _driver_components(e, nodes=nodes)
+    if rows is not None:
+        solved = _driver_components(e, rows, [r[0] for r in nodes.collect()])
         if solved is not None:
             return solved
+    sig = _edge_signature(e)
     converged = False
     for _ in range(max_iter):
         e = cut_lineage(_small_star(_large_star(e)))
@@ -390,7 +362,6 @@ def connected_components_adaptive(
     id_right: str = "id_right",
     label_rounds: int = 3,
     max_iter: int = 50,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Hybrid components kernel: a few min-label rounds first, star
     only on demand.
@@ -431,14 +402,15 @@ def connected_components_adaptive(
     raw = edges.select(
         F.col(id_left).alias("src"), F.col(id_right).alias("dst")
     ).localCheckpoint(eager=False)
-    e = raw.unionByName(
-        raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    e = cut_lineage(e)
-
-    bound = _CC_DRIVER_MAX_EDGES if small_graph_edges is None else small_graph_edges
-    if bound and e.count() <= bound:
-        solved = _driver_components(e, nodes=None)
+    e, rows = bounded_collect(
+        raw.unionByName(
+            raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct(),
+        "src",
+        "dst",
+    )
+    if rows is not None:
+        solved = _driver_components(e, rows)
         if solved is not None:
             return solved
 

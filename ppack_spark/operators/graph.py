@@ -36,8 +36,10 @@ so the plan does not grow with ``iters``. The final ``rank`` column
 is minted by operators/util.py:distributed_rank — range-partitioned
 local ranks plus bucket offsets — so NO node-table-sized frame ever
 crosses a single-partition window (the r13 advisor's doc→doc-scale
-concern); the only driver transfer anywhere is the seed-sum guard's
-1-row action when ``seeds`` is passed.
+concern). Graphs within the driver bound
+(operators/util.py:bounded_collect) run the PageRank/HITS iteration
+loops on the driver instead, bit-identically; above it the only driver
+transfer is the seed-sum guard's 1-row action when ``seeds`` is passed.
 
 Reference parity: the reference engine (nerskin/ppack) has no graph
 surface; this extends the SURVEY.md §2e pipeline families with the
@@ -47,41 +49,11 @@ crawl-authority operators a 100 TB web-corpus build needs.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import cut_lineage, distributed_rank
-
-# Below this many collapsed edges the iterative loops run on the
-# driver instead of as per-iteration Spark jobs: the trajectories are
-# integer fixed-point BY DESIGN (every cross-node sum is a long sum,
-# every float step one correctly-rounded IEEE op on bit-identical
-# inputs — the property that makes them SQL-oracle-replayable), so a
-# Python loop over the SAME Spark-computed shares/teleport/initial
-# state reproduces the distributed trajectory bit-for-bit while
-# skipping ~4 checkpoint/aggregate jobs per iteration. Everything
-# BEFORE the loop (edge collapse, share division, seed normalization)
-# stays in Spark, so the driver path starts from identical numbers.
-# Same bounded-collect class as the CC kernels' union-find
-# (operators/cluster.py); override with PPACK_GRAPH_DRIVER_MAX_EDGES,
-# 0 disables. Any 100 TB graph exceeds the bound and takes the
-# distributed loop unchanged.
-_GRAPH_DRIVER_MAX_EDGES = int(
-    os.environ.get("PPACK_GRAPH_DRIVER_MAX_EDGES", "200000")
-)
-
-
-def _driver_safe_node_type(df: DataFrame, col: str):
-    import pyspark.sql.types as T
-
-    dtype = df.schema[col].dataType
-    if isinstance(
-        dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.StringType)
-    ):
-        return dtype
-    return None
+from .util import bounded_collect, cut_lineage, distributed_rank
 
 
 def _edge_weights(
@@ -109,7 +81,6 @@ def pagerank(
     seeds: DataFrame | None = None,
     seed_node: str = "node",
     seed_weight: str | None = None,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration (optionally personalized) PageRank over an
     edge list.
@@ -129,8 +100,8 @@ def pagerank(
     all-node seed table reproduces the unseeded result exactly.
     Iteration 0 starts at s. Non-positive seed weights are ignored;
     if no positive-weight seed matches a graph node, raises
-    ``ValueError`` (checked with one bounded 1-row action — the
-    module's only driver transfer). The trajectory is carried in
+    ``ValueError`` (checked with one bounded 1-row action). The
+    trajectory is carried in
     fixed-point integer units of 10^-``round_digits`` (see the inline
     comment — cross-engine determinism with no rounding-boundary
     luck); the returned ``pagerank`` is the integer rank divided back
@@ -168,10 +139,15 @@ def pagerank(
     outw = ew.groupBy("__src").agg(F.sum("__w").alias("__outw"))
     # Per-edge share of its source's rank — computed once, reused by
     # every iteration (the division happens edge-side so the join in
-    # the loop is rank ⋈ shares, nothing else).
-    shares = ew.join(outw, "__src").select(
-        "__src", "__dst", (F.col("__w") / F.col("__outw")).alias("__share")
-    ).localCheckpoint(eager=False)
+    # the loop is rank ⋈ shares, nothing else). Small share tables are
+    # also collected for the driver loop (see _driver_pagerank).
+    shares, share_rows = bounded_collect(
+        ew.join(outw, "__src").select(
+            "__src", "__dst", (F.col("__w") / F.col("__outw")).alias("__share")
+        ),
+        "__src",
+        "__dst",
+    )
     if seeds is None:
         # N rides along as a column: no driver-side count, the same
         # 1-row broadcast pattern as corpus_mix_report.
@@ -235,21 +211,15 @@ def pagerank(
         .alias("pr_i"),
         "__s",
     ).localCheckpoint(eager=False)
-    has_out = outw.select(F.col("__src").alias("node")).localCheckpoint(
-        eager=False
-    )
-    # small-graph driver loop (see _GRAPH_DRIVER_MAX_EDGES): the count
-    # materializes the share checkpoint, which iteration 1 would do
-    # anyway, so a fall-through wastes nothing
-    bound = (
-        _GRAPH_DRIVER_MAX_EDGES if small_graph_edges is None else small_graph_edges
-    )
-    if bound and shares.count() <= bound:
-        solved = _driver_pagerank(ranks, shares, has_out, damping, iters, sc)
+    if share_rows is not None:
+        solved = _driver_pagerank(ranks, share_rows, damping, iters, sc)
         if solved is not None:
             return distributed_rank(
                 solved, [F.desc("pagerank"), F.asc("node")], "rank"
             ).select("node", "pagerank", "rank")
+    has_out = outw.select(F.col("__src").alias("node")).localCheckpoint(
+        eager=False
+    )
     for _ in range(iters):
         dang = (
             ranks.join(has_out, "node", "left_anti")
@@ -291,25 +261,23 @@ def pagerank(
 
 def _driver_pagerank(
     ranks: DataFrame,
-    shares: DataFrame,
-    has_out: DataFrame,
+    share_rows: list,
     damping: float,
     iters: int,
     sc: float,
 ) -> DataFrame | None:
     """The pagerank iteration loop on the driver, over the SAME
-    Spark-computed (node, pr_i, __s) state and (__src, __dst, __share)
-    table: every expression below mirrors the distributed loop's
-    Column tree op for op (long sums exact either way; each float step
-    one IEEE multiply/add/divide on bit-identical operands), so the
-    trajectory is reproduced bit-for-bit. Returns ``None`` — caller
-    continues with the distributed loop — on exotic node types or NULL
-    state values."""
+    Spark-computed (node, pr_i, __s) state and collected
+    (__src, __dst, __share) rows: the trajectories are integer
+    fixed-point by design, and every expression below mirrors the
+    distributed loop's Column tree op for op (long sums exact either
+    way; each float step one IEEE multiply/add/divide on bit-identical
+    operands), so the trajectory is reproduced bit-for-bit. Everything
+    before the loop (edge collapse, share division, seed
+    normalization) stays in Spark. Returns ``None`` — caller continues
+    with the distributed loop — on NULL state values."""
     import pyspark.sql.types as T
 
-    dtype = _driver_safe_node_type(ranks, "node")
-    if dtype is None:
-        return None
     pr: dict = {}
     s: dict = {}
     for r in ranks.collect():
@@ -318,8 +286,8 @@ def _driver_pagerank(
             return None
         pr[n] = p
         s[n] = sv
-    share_rows = [(r[0], r[1], r[2]) for r in shares.collect()]
-    out_nodes = {r[0] for r in has_out.collect()}
+    # every source with positive out-weight has a share row
+    out_nodes = {u for u, _, _ in share_rows}
     for _ in range(iters):
         dang = 0
         for n, p in pr.items():
@@ -339,7 +307,7 @@ def _driver_pagerank(
         }
     schema = T.StructType(
         [
-            T.StructField("node", dtype, True),
+            T.StructField("node", ranks.schema["node"].dataType, True),
             T.StructField("pagerank", T.DoubleType(), True),
         ]
     )
@@ -391,7 +359,6 @@ def hits(
     weight: str | None = None,
     iters: int = 3,
     round_digits: int = 9,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration HITS hubs & authorities (Kleinberg 1999) over
     an edge list — PageRank's companion readout for a crawl frontier:
@@ -436,14 +403,22 @@ def hits(
     # whole edge-derivation chain. Same cut discipline as
     # :func:`pagerank`: only edge-/node-keyed (key, long) frames ever
     # persist, never a payload.
-    ew = _edge_weights(edges, src, dst, weight).localCheckpoint(eager=False)
+    sc = float(10**round_digits)
+    ew, edge_rows = bounded_collect(
+        _edge_weights(edges, src, dst, weight), "__src", "__dst"
+    )
+    if edge_rows is not None:
+        solved = _driver_hits(ew, edge_rows, iters, sc)
+        if solved is not None:
+            return distributed_rank(
+                solved, [F.desc("authority"), F.asc("node")], "rank"
+            ).select("node", "hub", "authority", "rank")
     nodes = (
         ew.select(F.col("__src").alias("node"))
         .unionByName(ew.select(F.col("__dst").alias("node")))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    sc = float(10**round_digits)
     ncnt = nodes.agg(F.count(F.lit(1)).cast("double").alias("__n"))
     # h0: uniform over ALL nodes (integer grid); a0 rides along as 0
     # until the first authority update overwrites it.
@@ -452,16 +427,6 @@ def hits(
         F.floor(F.lit(sc) / F.col("__n") + F.lit(0.5)).cast("long").alias("h_i"),
         F.lit(0).cast("long").alias("a_i"),
     ).localCheckpoint(eager=False)
-    # small-graph driver loop — same contract as _driver_pagerank
-    bound = (
-        _GRAPH_DRIVER_MAX_EDGES if small_graph_edges is None else small_graph_edges
-    )
-    if bound and ew.count() <= bound:
-        solved = _driver_hits(nodes, ew, iters, sc)
-        if solved is not None:
-            return distributed_rank(
-                solved, [F.desc("authority"), F.asc("node")], "rank"
-            ).select("node", "hub", "authority", "rank")
     for _ in range(iters):
         araw = (
             state.join(ew, state["node"] == ew["__src"])
@@ -528,24 +493,19 @@ def hits(
 
 
 def _driver_hits(
-    nodes: DataFrame, ew: DataFrame, iters: int, sc: float
+    ew: DataFrame, edge_rows: list, iters: int, sc: float
 ) -> DataFrame | None:
     """The HITS iteration loop on the driver over the SAME
-    Spark-computed collapsed edges — op-for-op mirror of the
-    distributed loop (long contribution sums; one IEEE divide +
-    multiply per normalized value), bit-identical trajectory. Returns
-    ``None`` to fall back on exotic node types, NULL values, or a
-    zero normalization total (the distributed NaN path is not worth
+    Spark-computed collapsed (__src, __dst, __w) rows of ``ew`` —
+    op-for-op mirror of the distributed loop (long contribution sums;
+    one IEEE divide + multiply per normalized value), bit-identical
+    trajectory. The node set is the edge endpoints (``_edge_weights``
+    already dropped NULL ids). Returns ``None`` to fall back on a zero
+    normalization total (the distributed NaN path is not worth
     replicating)."""
     import pyspark.sql.types as T
 
-    dtype = _driver_safe_node_type(nodes, "node")
-    if dtype is None:
-        return None
-    node_list = [r[0] for r in nodes.collect()]
-    if any(n is None for n in node_list):
-        return None
-    edge_rows = [(r[0], r[1], r[2]) for r in ew.collect()]
+    node_list = list({n for u, v, _ in edge_rows for n in (u, v)})
     n_d = float(len(node_list))
     h0 = math.floor(sc / n_d + 0.5) if node_list else 0
     h = {n: h0 for n in node_list}
@@ -575,12 +535,12 @@ def _driver_hits(
         } if edge_rows else h
     schema = T.StructType(
         [
-            T.StructField("node", dtype, True),
+            T.StructField("node", ew.schema["__src"].dataType, True),
             T.StructField("hub", T.DoubleType(), True),
             T.StructField("authority", T.DoubleType(), True),
         ]
     )
-    return nodes.sparkSession.createDataFrame(
+    return ew.sparkSession.createDataFrame(
         [(n, h[n] / sc, a[n] / sc) for n in node_list], schema
     )
 

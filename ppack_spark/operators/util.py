@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "spread",
     "salted_join",
     "plan_cost_report",
     "cut_lineage",
+    "bounded_collect",
     "distributed_rank",
 ]
 
@@ -44,6 +49,59 @@ def cut_lineage(df: DataFrame) -> DataFrame:
         # (correctness) still stands, only the stats reset is lost
         return cp
     return DataFrame(jnew, spark)
+
+
+def _driver_max_edges() -> int:
+    raw = os.environ.get("PPACK_DRIVER_MAX_EDGES", "200000")
+    try:
+        bound = int(raw)
+    except ValueError:
+        bound = -1
+    if bound < 0:
+        raise ValueError(
+            "PPACK_DRIVER_MAX_EDGES must be a non-negative integer "
+            f"(0 disables the driver path), got {raw!r}"
+        )
+    return bound
+
+
+def bounded_collect(
+    df: DataFrame, *id_cols: str
+) -> tuple[DataFrame, list | None]:
+    """The one driver-or-distributed decision of the graph kernels
+    (connected components, PageRank, HITS): materialize ``df`` with
+    :func:`cut_lineage` and return ``(cut, rows)``, where ``rows`` is
+    ``cut.collect()`` when the frame may be solved on the driver and
+    ``None`` when the caller must run its distributed kernel on
+    ``cut``.
+
+    Why the bound exists: below ``PPACK_DRIVER_MAX_EDGES`` rows
+    (default 200000, ~a few MB collected; 0 disables; read at call
+    time) a Python loop finishes in milliseconds what costs several
+    checkpoint + aggregate jobs per distributed round, and above it the
+    driver's memory, not Spark's scheduling, would become the limit.
+    The row count rides on the materializing job as a
+    ``DataFrame.observe`` metric, so the decision costs no extra job.
+
+    The driver kernels order and hash ids in Python, which matches
+    Spark only for integral ids and binary-collated strings; any other
+    id type (a ``UTF8_LCASE`` string compares ``"A" == "a"`` in Spark)
+    takes the distributed path."""
+    bound = _driver_max_edges()
+    safe = all(_driver_safe_type(df.schema[c].dataType) for c in id_cols)
+    if not (bound and safe):
+        return cut_lineage(df), None
+    obs = Observation()
+    cut = cut_lineage(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    if obs.get["n"] > bound:
+        return cut, None
+    return cut, cut.collect()
+
+
+def _driver_safe_type(dtype) -> bool:
+    if isinstance(dtype, T.StringType):
+        return dtype.collation == "UTF8_BINARY"
+    return isinstance(dtype, T.IntegralType)
 
 
 def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:

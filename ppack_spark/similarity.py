@@ -8,29 +8,14 @@ boost threshold 0.7 — the same constants DuckDB uses, verified against
 its output in tests/test_similarity.py.
 
 Inside each Arrow batch the residual (non-null, non-equal, non-empty)
-pairs are scored by the first fast implementation that exactly
-reproduces the pure-Python reference on a discriminating self-check
-corpus (``_JW_SELFCHECK``): rapidfuzz ``cpdist``, else jellyfish, else
-a numpy-vectorized kernel over padded byte matrices
-(``_numpy_jw_batch``) that is always available and bit-identical by
-construction. Each candidate is checked independently, so an
-importable-but-divergent library never masks a later exact one. At
-26M+ candidate pairs the vectorized path keeps the JW column from
-dominating the comparison stage.
-
-ENVIRONMENT NOTE (round 9, re-confirmed at rounds 10 and 11): neither
-``rapidfuzz`` nor ``jellyfish``
-is installed in this container, and installing packages is out of
-scope for this build environment (no network package installs) — the
-numpy kernel is the tier that actually runs here, exactly as the
-selection ladder intends. Measured honestly it is NOT the hot spot:
-the ``jw_approx_buckets`` gate's former 21 s decomposed into a 1-2
-core pin on an unspread probe side (~7 s single-threaded JVM
-Levenshtein + ~4 s single-threaded Arrow hop); with the pair set
-``spread()`` across cores the same plan runs ~1.6 s, kernel included
-(the kernel sustains ~375k pairs/s/core on 18-byte names at 10k-row
-Arrow batches). On a deployment where rapidfuzz IS installable, the
-ladder picks it up automatically and the self-check gates exactness.
+pairs are scored by a numpy-vectorized kernel over padded byte
+matrices (``_numpy_jw_batch``), bit-identical to the pure-Python
+reference by construction and checked against it on a discriminating
+self-check corpus (``_JW_SELFCHECK``) before first use; on a mismatch
+the pure loop scores instead. At 26M+ candidate pairs the vectorized
+path keeps the JW column from dominating the comparison stage. It is
+not the hot spot: the kernel sustains ~375k pairs/s/core on 18-byte
+names at 10k-row Arrow batches.
 
 UDF placement policy (SURVEY §7 risk register): similarity UDFs run
 strictly *post-blocking* over the candidate pairs — never inside a
@@ -255,54 +240,23 @@ def _numpy_jw_batch(sub_l: list, sub_r: list) -> list:
     return out.tolist()
 
 
-def _rapidfuzz_scorer():
-    from rapidfuzz.distance import JaroWinkler
-    from rapidfuzz.process import cpdist
-
-    def scorer(sub_l, sub_r):
-        try:
-            out = cpdist(sub_l, sub_r, scorer=JaroWinkler.similarity, dtype=np.float64)
-        except TypeError:  # older rapidfuzz without dtype kwarg
-            out = cpdist(sub_l, sub_r, scorer=JaroWinkler.similarity)
-        return np.asarray(out, dtype=np.float64).tolist()
-
-    return scorer
-
-
-def _jellyfish_scorer():
-    import jellyfish
-
-    def scorer(sub_l, sub_r):
-        return [
-            jellyfish.jaro_winkler_similarity(l.decode("latin-1"), r.decode("latin-1"))
-            for l, r in zip(sub_l, sub_r)
-        ]
-
-    return scorer
-
-
 def _load_fast_jw_batch():
-    """Return the first batch scorer (bytes pairs → list[float]) that
+    """Return the numpy batch scorer (bytes pairs → list[float]) if it
     exactly reproduces ``jaro_winkler_py`` on the discriminating
-    self-check corpus. Candidates are tried INDEPENDENTLY in order —
-    rapidfuzz, jellyfish, then the numpy kernel — so an importable but
-    semantically divergent library (e.g. a rapidfuzz build that skips
-    the 0.7 boost threshold, or returns float32) is rejected without
-    masking a later exact candidate. The numpy kernel is deterministic
-    float64 replaying the reference expression order, so in practice
-    this never returns None; the gate still protects against a numpy
-    regression by falling back to the pure loop."""
+    self-check corpus, else ``None`` (the caller then scores with the
+    pure loop). The kernel is deterministic float64 replaying the
+    reference expression order, so in practice this never returns
+    None; the check guards against a numpy regression."""
     check_l = [a.encode("utf-8") for a, _ in _JW_SELFCHECK]
     check_r = [b.encode("utf-8") for _, b in _JW_SELFCHECK]
     want = _pyloop_jw_batch(check_l, check_r)
-    for factory in (_rapidfuzz_scorer, _jellyfish_scorer, lambda: _numpy_jw_batch):
-        try:
-            scorer = factory()
-            got = scorer(check_l, check_r)
-        except Exception:
-            continue
-        if all(abs(g - w) <= 1e-12 for g, w in zip(got, want)):
-            return scorer
+    scorer = _numpy_jw_batch
+    try:
+        got = scorer(check_l, check_r)
+    except Exception:
+        return None
+    if all(abs(g - w) <= 1e-12 for g, w in zip(got, want)):
+        return scorer
     return None
 
 
@@ -313,7 +267,7 @@ def _jw_batch(l_arr, r_arr) -> np.ndarray:
     """Elementwise JW over two object arrays of str/None. NULL/empty/
     equal rows are resolved in Python (DuckDB edge semantics: empty →
     0.0 even for ''=='', equal → 1.0); the residual pairs go to the
-    verified C batch scorer when available, else the pure-Python loop."""
+    self-checked numpy batch scorer, else the pure-Python loop."""
     if not _FAST_JW_BATCH:
         _FAST_JW_BATCH.append(_load_fast_jw_batch())
     fast = _FAST_JW_BATCH[0]

@@ -90,3 +90,27 @@ def assert_same(
     left = left.sort_values(cols, ignore_index=True)
     right = right.sort_values(cols, ignore_index=True)
     pd.testing.assert_frame_equal(left, right, check_dtype=check_dtype, check_exact=False, rtol=1e-9, atol=1e-12)
+
+
+def distributed(fn, *args, **kw):
+    """``fn(*args, **kw)`` with the graph kernels' driver path disabled
+    (``PPACK_DRIVER_MAX_EDGES=0``)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("PPACK_DRIVER_MAX_EDGES", "0")
+        return fn(*args, **kw)
+
+
+def spy_driver_paths(monkeypatch, module):
+    """Record which path each ``bounded_collect`` call in ``module``
+    hands its kernel: ``"driver"`` (rows collected) or
+    ``"distributed"``."""
+    real = module.bounded_collect
+    paths = []
+
+    def spy(df, *id_cols):
+        cut, rows = real(df, *id_cols)
+        paths.append("distributed" if rows is None else "driver")
+        return cut, rows
+
+    monkeypatch.setattr(module, "bounded_collect", spy)
+    return paths

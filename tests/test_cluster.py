@@ -5,7 +5,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import distributed, spy_driver_paths
+
 import ppack_spark as pp
+import ppack_spark.operators.cluster as cluster
 from ppack_spark.operators.cluster import (
     attach_cluster_ids,
     connected_components,
@@ -223,19 +226,24 @@ def test_non_convergence_raises(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_left long, id_right long"
     )
-    # small_graph_edges=0 pins the DISTRIBUTED kernel's contract — the
-    # driver union-find path (which cannot fail to converge) would
-    # otherwise absorb a graph this small
+    # pin the DISTRIBUTED kernel's contract — the driver union-find
+    # path (which cannot fail to converge) would otherwise absorb a
+    # graph this small
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=2, small_graph_edges=0)
+        distributed(connected_components, edges, max_iter=2)
 
 
-def test_driver_kernel_matches_distributed(spark):
+def test_driver_kernel_matches_distributed(spark, monkeypatch):
     """The small-graph driver union-find must agree bit-for-bit with
     every distributed kernel — on a long chain (worst case for
     min-label), a pseudo-random multigraph (duplicate + reversed
     edges), string node ids, and a graph with isolated self-loop
-    nodes."""
+    nodes. At the bound: a graph of exactly PPACK_DRIVER_MAX_EDGES
+    compared rows takes the driver path, one of bound+1 rows the
+    distributed path, with identical output; the bound is set after
+    import, so this also pins that it is read at call time. Each kernel
+    compares its own row count: symmetrized rows for label/adaptive
+    (10 for a 5-edge chain), oriented rows for star (5)."""
     cases = [
         spark.createDataFrame(
             [(i, i + 1) for i in range(40)], "id_left long, id_right long"
@@ -252,17 +260,69 @@ def test_driver_kernel_matches_distributed(spark):
     for df in cases:
         driver = _components_dict(connected_components_star(df))
         assert driver == _components_dict(
-            connected_components_star(df, small_graph_edges=0, max_iter=15)
+            distributed(connected_components_star, df, max_iter=15)
         )
         assert driver == _components_dict(
-            connected_components(df, small_graph_edges=0, max_iter=200)
+            distributed(connected_components, df, max_iter=200)
         )
         assert driver == _components_dict(
-            connected_components_adaptive(df, small_graph_edges=0)
+            distributed(connected_components_adaptive, df)
         )
         # the label/adaptive kernels' driver paths agree too
         assert driver == _components_dict(connected_components(df))
         assert driver == _components_dict(connected_components_adaptive(df))
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "id_left long, id_right long"
+    )
+    want = {i: 0 for i in range(6)}
+    paths = spy_driver_paths(monkeypatch, cluster)
+    for kernel, n_rows in (
+        (connected_components, 10),
+        (connected_components_adaptive, 10),
+        (connected_components_star, 5),
+    ):
+        for bound, path in ((n_rows, "driver"), (n_rows - 1, "distributed")):
+            monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", str(bound))
+            paths.clear()
+            assert _components_dict(kernel(edges)) == want, (kernel, bound)
+            # adaptive's escalation may add a star call on the
+            # contracted graph; the first decision is the kernel's own
+            assert paths[0] == path, (kernel, bound, paths)
+
+
+@pytest.mark.parametrize("raw", ["abc", "-1"])
+def test_driver_bound_malformed_raises_at_call(spark, monkeypatch, raw):
+    """A malformed bound fails the call that reads it, naming the
+    variable — not the import of the module."""
+    edges = spark.createDataFrame([(1, 2)], "id_left long, id_right long")
+    monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", raw)
+    with pytest.raises(ValueError, match="PPACK_DRIVER_MAX_EDGES"):
+        connected_components_adaptive(edges)
+
+
+def test_collated_string_ids_take_distributed_path(spark, monkeypatch):
+    """Under a non-binary collation Spark orders and compares ids
+    differently from Python ("A" == "a", "a" < "B" under UTF8_LCASE),
+    so the driver union-find would answer differently: such ids must
+    get the distributed kernels' answer. Node values that are equal
+    under the collation may come back in either case, so outputs are
+    compared lower-cased."""
+    edges = spark.createDataFrame(
+        [("A", "a"), ("a", "B"), ("c", "D")],
+        "id_left string collate UTF8_LCASE, id_right string collate UTF8_LCASE",
+    )
+
+    def lowered(df):
+        return sorted(
+            {(r["node"].lower(), r["component"].lower()) for r in df.collect()}
+        )
+
+    want = lowered(distributed(connected_components_adaptive, edges))
+    assert want == [("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")]
+    paths = spy_driver_paths(monkeypatch, cluster)
+    assert lowered(connected_components_adaptive(edges)) == want
+    assert set(paths) == {"distributed"}
 
 
 def test_linker_cluster_two_dataset_raises(spark, tables):

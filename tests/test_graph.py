@@ -6,9 +6,14 @@ dangling-node convention, weighted edges, and hardening."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import distributed, spy_driver_paths
+
+import ppack_spark.operators.graph as graph
 from ppack_spark.operators.graph import degree_report, pagerank
 
 
@@ -407,11 +412,17 @@ def test_triangles_empty_edges(spark):
     assert out.count() == 0
 
 
-def test_graph_driver_loops_match_distributed(spark):
+def _by_node(df):
+    return {r["node"]: tuple(r)[1:] for r in df.collect()}
+
+
+def test_graph_driver_loops_match_distributed(spark, monkeypatch):
     """The small-graph driver iteration paths must reproduce the
     distributed trajectories BIT-FOR-BIT (same Spark-computed shares /
     teleport / initial state, op-for-op float arithmetic) — weighted
-    multigraph with dangling nodes, a seeded variant, and HITS."""
+    multigraph with dangling nodes, a seeded variant, and HITS — and
+    the bound is inclusive: 5 collapsed edges run on the driver at
+    bound 5 and distributed at bound 4, set after import."""
     from ppack_spark.operators.graph import hits
 
     rows = [
@@ -420,16 +431,68 @@ def test_graph_driver_loops_match_distributed(spark):
     ]
     e = spark.createDataFrame(rows, "src string, dst string, w double")
 
-    def _d(df):
-        return {r["node"]: tuple(r)[1:] for r in df.collect()}
-
     for kw in ({}, {"weight": "w"}, {"iters": 5}):
-        assert _d(pagerank(e, **kw)) == _d(
-            pagerank(e, small_graph_edges=0, **kw)
+        assert _by_node(pagerank(e, **kw)) == _by_node(
+            distributed(pagerank, e, **kw)
         ), kw
     seeds = spark.createDataFrame([("a", 3.0), ("d", 1.0)], "node string, w double")
-    assert _d(pagerank(e, seeds=seeds, seed_weight="w")) == _d(
-        pagerank(e, seeds=seeds, seed_weight="w", small_graph_edges=0)
+    assert _by_node(pagerank(e, seeds=seeds, seed_weight="w")) == _by_node(
+        distributed(pagerank, e, seeds=seeds, seed_weight="w")
     )
-    assert _d(hits(e, weight="w")) == _d(hits(e, weight="w", small_graph_edges=0))
-    assert _d(hits(e)) == _d(hits(e, small_graph_edges=0))
+    want_hits = _by_node(distributed(hits, e, weight="w"))
+    assert _by_node(hits(e, weight="w")) == want_hits
+    assert _by_node(hits(e)) == _by_node(distributed(hits, e))
+
+    paths = spy_driver_paths(monkeypatch, graph)
+    for bound, path in (("5", "driver"), ("4", "distributed")):
+        monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", bound)
+        paths.clear()
+        assert _by_node(hits(e, weight="w")) == want_hits, bound
+        assert paths == [path], (bound, paths)
+
+
+@pytest.mark.parametrize("raw", ["abc", "-1"])
+def test_graph_driver_bound_malformed_raises_at_call(spark, monkeypatch, raw):
+    """A malformed bound fails the PageRank/HITS call that reads it,
+    naming the variable; importing the modules with it set does not."""
+    import subprocess
+    import sys
+
+    from ppack_spark.operators.graph import hits
+
+    env = {**os.environ, "PPACK_DRIVER_MAX_EDGES": raw}
+    subprocess.run(
+        [sys.executable, "-c", "import ppack_spark.operators.graph"],
+        env=env,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        check=True,
+    )
+    e = _edges(spark, [("a", "b")])
+    monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", raw)
+    for fn in (pagerank, hits):
+        with pytest.raises(ValueError, match="PPACK_DRIVER_MAX_EDGES"):
+            fn(e)
+
+
+def test_graph_collated_string_ids_take_distributed_path(spark, monkeypatch):
+    """Under UTF8_LCASE Spark merges "A" and "a" into one node; the
+    driver loops would keep two. PageRank and HITS must give the
+    distributed answer (compared with lower-cased node names, since
+    either spelling may represent the merged node)."""
+    from ppack_spark.operators.graph import hits
+
+    e = spark.createDataFrame(
+        [("A", "b"), ("a", "b"), ("b", "A"), ("b", "c")],
+        "src string collate UTF8_LCASE, dst string collate UTF8_LCASE",
+    )
+
+    def lowered(df):
+        return sorted((r["node"].lower(),) + tuple(r)[1:] for r in df.collect())
+
+    paths = spy_driver_paths(monkeypatch, graph)
+    for fn in (pagerank, hits):
+        want = lowered(distributed(fn, e))
+        assert [r[0] for r in want] == ["a", "b", "c"], fn
+        paths.clear()
+        assert lowered(fn(e)) == want, fn
+        assert paths == ["distributed"], fn

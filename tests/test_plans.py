@@ -398,10 +398,38 @@ def test_plan_cost_report_census(spark, tables, queries):
     mix = plan_cost_report(queries["temperature_mix"](spark, SF_DIR))
     assert mix["n_broadcasts"] >= 1 and not mix["has_cartesian"]
 
+    # the disjoint passes need no pair-keyed distinct exchange: the
+    # blocking joins broadcast and nothing shuffles
     blocking = plan_cost_report(queries["blocking_multi_pass"](spark, SF_DIR))
-    assert blocking["n_shuffles"] >= 1
+    assert blocking["n_shuffles"] == 0
+    assert blocking["n_broadcasts"] >= 1
     assert not blocking["has_python_udf"]
     assert blocking["n_scans"] >= 1
+
+
+def test_ten_pass_blocking_plan_builds_and_matches_union_distinct(spark):
+    """Disjoint blocking ANDs every pass with the negation of all
+    earlier passes, so a k-pass spec carries O(k²) negated predicates.
+    At k=10 the plan must still build and run without a cartesian
+    product, and return exactly the union-all → distinct pair set of
+    the raw passes."""
+    from ppack_spark.blocking import _pass_frames, extract_blocks
+    from ppack_spark.operators.util import plan_cost_report
+
+    data = spark.createDataFrame(
+        [(i, *[(i * (k + 3)) % (k + 5) for k in range(10)]) for i in range(40)],
+        "uid long, " + ", ".join(f"k{k} long" for k in range(10)),
+    )
+    rules = [f"k{k}" for k in range(10)]
+    got = extract_blocks(data, data, "uid", "uid", blocking_variables=rules)
+    assert not plan_cost_report(got)["has_cartesian"]
+    raw = _pass_frames(data, data, "uid", "uid", rules)
+    union = raw[0]
+    for frame in raw[1:]:
+        union = union.unionByName(frame)
+    rows = got.collect()
+    assert len(rows) == len(set(rows))  # duplicate-free by construction
+    assert set(rows) == set(union.distinct().collect())
 
 
 def test_bm25_plan_shape(spark, tables, queries):
