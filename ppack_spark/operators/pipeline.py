@@ -1356,37 +1356,63 @@ def prepare_corpus_stages(
 ) -> list[tuple[str, DataFrame]]:
     """The :func:`prepare_corpus` chain with every stage boundary
     exposed: ``[("input", df), ("quality", ...), ...]`` — the last
-    entry is what ``prepare_corpus`` returns. Consumed by
-    :func:`corpus_stage_report` (stage-survival observability) and by
-    anyone needing a mid-chain tap (e.g. training on the deduped
-    corpus while auditing what decontamination dropped)."""
+    entry is what ``prepare_corpus`` returns. For anyone needing a
+    mid-chain tap (e.g. training on the deduped corpus while auditing
+    what decontamination dropped)."""
+    return _corpus_chain(
+        df, lambda name, frame: frame, eval_docs, quality, line_dedup,
+        exact_dedup, sample_fraction, text_col, id_col,
+    )
+
+
+def _corpus_chain(
+    df: DataFrame,
+    tap,
+    eval_docs: DataFrame | None,
+    quality: bool,
+    line_dedup: bool,
+    exact_dedup: bool,
+    sample_fraction: float | None,
+    text_col: str,
+    id_col: str,
+) -> list[tuple[str, DataFrame]]:
+    """The one definition of the corpus chain. ``tap(name, frame)`` is
+    applied at every stage boundary and its result is what flows into
+    the next stage; side inputs (decontamination's contaminated-id
+    set) read the tapped frame but are not tapped themselves."""
     from ..functions.text import c4_quality_flags
 
-    stages: list[tuple[str, DataFrame]] = [("input", df)]
-    out = df
+    stages: list[tuple[str, DataFrame]] = []
+
+    def boundary(name: str, frame: DataFrame) -> DataFrame:
+        frame = tap(name, frame)
+        stages.append((name, frame))
+        return frame
+
+    out = boundary("input", df)
     if quality:
-        out = out.filter(c4_quality_flags(text_col)["keep"])
-        stages.append(("quality", out))
+        out = boundary("quality", out.filter(c4_quality_flags(text_col)["keep"]))
     if line_dedup:
         out = dedup_corpus_lines(out, text_col=text_col, id_col=id_col).drop(
             "n_lines_kept"
         )
-        out = out.filter(F.length(F.trim(F.col(text_col))) > 0)
-        stages.append(("line_dedup", out))
+        out = boundary(
+            "line_dedup", out.filter(F.length(F.trim(F.col(text_col))) > 0)
+        )
     if exact_dedup:
         from .dedup import exact_dedup_keep_first
 
-        out = exact_dedup_keep_first(out, text_col=text_col, id_col=id_col)
-        stages.append(("exact_dedup", out))
+        out = boundary(
+            "exact_dedup",
+            exact_dedup_keep_first(out, text_col=text_col, id_col=id_col),
+        )
     if eval_docs is not None:
         contaminated = eval_ngram_contamination(
             out, eval_docs, k=3, min_shared=2, text_col=text_col, id_col=id_col
         ).select(id_col).distinct()
-        out = out.join(contaminated, id_col, "left_anti")
-        stages.append(("decontaminate", out))
+        out = boundary("decontaminate", out.join(contaminated, id_col, "left_anti"))
     if sample_fraction is not None:
-        out = hash_sample(out, sample_fraction, id_col=id_col)
-        stages.append(("sample", out))
+        boundary("sample", hash_sample(out, sample_fraction, id_col=id_col))
     return stages
 
 
@@ -1399,161 +1425,43 @@ def corpus_stage_report(
     sample_fraction: float | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reuse: bool = False,
 ) -> DataFrame:
     """Stage-survival funnel for the corpus-preparation chain: one row
     per :func:`prepare_corpus` stage boundary with the number of
     documents still alive — the observability report a data-prep run
     publishes next to its output ("quality kept 84 %, line dedup
     emptied 2 %, exact dedup dropped 11 %, decontamination 0.3 %").
-    Returns (stage_idx, stage, n_docs).
+    Returns (stage_idx, stage, n_docs) as a small local DataFrame.
 
-    Single-pass shape (round 7 — the earlier version re-executed stage
-    ``i``'s whole prefix for each of the k counts, ~3x the chain cost
-    at k=6): every row carries one conjunctive survival FLAG per
-    stage, and the report is ONE aggregation summing the flags.
-    Row-local stages (quality, sample) are pure expressions on the
-    spine; the corpus-wide stages keep exactly the joins the real
-    chain pays — line-dedup's duplicate-line join, exact-dedup's
-    winner semi-join, decontamination's shingle join — each executed
-    ONCE against the flagged spine. The spine is lineage-cut
-    (executor-local materialization of id + cleaned text + flags —
-    the documented price of a full-corpus diagnostic) after the
-    line-dedup join so the later stages' build sides re-read
-    materialized rows instead of replaying the rewrite. Flag
-    semantics mirror the chain's filters bit-for-bit: a NULL
-    predicate coalesces to dead, exactly as ``filter`` drops NULL.
+    Unlike the other operators here this one EXECUTES at call time:
+    it runs the real chain once (a ``noop`` write of the final stage)
+    with a ``DataFrame.observe`` row count at every stage boundary, so
+    the funnel costs one run of ``prepare_corpus`` and cannot drift
+    from it."""
+    from pyspark.sql import Observation
 
-    Measured honestly: at sf0.1 (5k docs) WALL-CLOCK matches the old
-    version (~5.7s both) because Spark ran the old union's k count
-    branches concurrently on an idle 32-core cluster — wall was
-    already ≈ the slowest branch. What this rewrite halves is total
-    EXECUTED work (sum of the old branches: 9.8s vs 5.7s), which is
-    the number that matters once the cluster is saturated — i.e. on
-    any real corpus.
+    observations: list[Observation] = []
 
-    ``reuse=True`` (round 11 — verdict item 4) trades executor memory
-    for the remaining prefix re-execution: each corpus-wide stage's
-    BUILD side consumes the flagged spine as it stood one stage
-    earlier, so by default line-dedup replays the quality map over the
-    raw scan and decontamination replays the exact-dedup join — the
-    documented diagnostic price that bends the cost curve up as stages
-    stack. With ``reuse`` the spine is lineage-cut (executor-local
-    materialization) at each boundary a LATER stage will re-read, so
-    the report costs ~one pipeline pass plus materialization I/O. The
-    default stays zero-side-effect (no caching a caller didn't ask
-    for); counts are bit-identical either way — the same gate oracle
-    covers both paths."""
-    from ..functions.text import c4_quality_flags
-    from .dedup import exact_dedup_groups
-    from .util import cut_lineage
+    def observed(name: str, frame: DataFrame) -> DataFrame:
+        observations.append(Observation())
+        return frame.observe(observations[-1], F.count(F.lit(1)).alias("n"))
 
-    spine = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-    names: list[str] = ["input"]
-    flags: list[str] = []  # one boolean col per post-input stage, conjunctive
-    alive: Column = F.lit(True)
-
-    def _add(name: str, cond: Column) -> None:
-        nonlocal spine, alive
-        col = f"__f_{name}"
-        spine = spine.withColumn(col, F.coalesce(alive & cond, F.lit(False)))
-        alive = F.col(col)
-        flags.append(col)
-        names.append(name)
-
-    if quality:
-        _add("quality", c4_quality_flags("__text")["keep"])
-        # reuse: the next corpus-wide stage's build side re-reads the
-        # quality-flagged spine — materialize it once instead of
-        # replaying the quality expressions over the raw scan
-        if reuse and (
-            line_dedup or exact_dedup or eval_docs is not None
-        ):
-            spine = cut_lineage(spine)
-    cur_text = "__text"
-    if line_dedup:
-        # internal names must dodge dedup_corpus_lines' own `__id`
-        cleaned = dedup_corpus_lines(
-            spine.filter(alive).select(
-                F.col("__id").alias("__lid"), F.col("__text").alias("__ltext")
-            ),
-            text_col="__ltext",
-            id_col="__lid",
-        ).select(F.col("__lid").alias("__id"), F.col("__ltext").alias("__clean"))
-        spine = spine.join(cleaned, "__id", "left")
-        cur_text = "__clean"
-        _add("line_dedup", F.length(F.trim(F.col("__clean"))) > 0)
-        # materialize WITHOUT the raw text: every later stage reads
-        # the cleaned text, so the spine that downstream build sides
-        # re-read carries one text copy, not two
-        spine = cut_lineage(spine.select("__id", "__clean", *flags))
-    if exact_dedup:
-        winners = exact_dedup_groups(
-            spine.filter(alive).select("__id", cur_text),
-            text_col=cur_text,
-            id_col="__id",
-        ).select(F.col("keep_id").alias("__keep_id"))
-        spine = spine.join(
-            winners, F.col("__id") == F.col("__keep_id"), "left"
-        )
-        _add("exact_dedup", F.col("__keep_id").isNotNull())
-        # reuse: decontamination's shingle build side would replay
-        # this winner join; only worth materializing when a later
-        # corpus-wide stage exists (the final agg alone reads it once)
-        if reuse and eval_docs is not None:
-            spine = cut_lineage(spine.select("__id", cur_text, *flags))
-    if eval_docs is not None:
-        # contamination joins BOTH sides on the caller's column names
-        # (same contract as prepare_corpus_stages), so rename back
-        cont = (
-            eval_ngram_contamination(
-                spine.filter(alive).select(
-                    F.col("__id").alias(id_col), F.col(cur_text).alias(text_col)
-                ),
-                eval_docs,
-                k=3,
-                min_shared=2,
-                text_col=text_col,
-                id_col=id_col,
-            )
-            .select(F.col(id_col).alias("__cont_id"))
-            .distinct()
-        )
-        spine = spine.join(
-            cont, F.col("__id") == F.col("__cont_id"), "left"
-        )
-        _add("decontaminate", F.col("__cont_id").isNull())
-    if sample_fraction is not None:
-        if not 0.0 <= sample_fraction <= 1.0:
-            raise ValueError(
-                f"fraction must be in [0, 1], got {sample_fraction}"
-            )
-        cut_int = int(sample_fraction * 0x10000)
-        cond = (
-            F.lit(True)
-            if cut_int >= 0x10000
-            else _id_hash("__id", 4, "") < F.lit(format(cut_int, "04x"))
-        )
-        _add("sample", cond)
-
-    aggs = [F.count(F.lit(1)).cast("long").alias("__n_input")] + [
-        F.sum(F.col(c).cast("long")).alias(f"__n{i}")
-        for i, c in enumerate(flags)
-    ]
-    counts = spine.agg(*aggs)
-    rows = [
-        F.struct(
-            F.lit(i).cast("long").alias("stage_idx"),
-            F.lit(name).alias("stage"),
-            F.coalesce(
-                F.col("__n_input" if i == 0 else f"__n{i - 1}"), F.lit(0)
-            )
-            .cast("long")
-            .alias("n_docs"),
-        )
-        for i, name in enumerate(names)
-    ]
-    return counts.select(F.inline(F.array(*rows)))
+    stages = _corpus_chain(
+        df, observed, eval_docs, quality, line_dedup, exact_dedup,
+        sample_fraction, text_col, id_col,
+    )
+    stages[-1][1].write.format("noop").mode("overwrite").save()
+    rows = []
+    for i, ((name, frame), obs) in enumerate(zip(stages, observations)):
+        # AQE prunes the joins above a stage it finds empty at run
+        # time, so the metric nodes beneath them never report (the
+        # observation completes with an empty row); only then — some
+        # stage is empty — is a stage counted directly.
+        n = obs.get["n"] if obs._jo.getRow().size() else frame.count()
+        rows.append((i, name, n))
+    return df.sparkSession.createDataFrame(
+        rows, "stage_idx long, stage string, n_docs long"
+    )
 
 
 def merge_corpus_delta_fuzzy(

@@ -1396,9 +1396,9 @@ def test_curriculum_null_scores_go_last(spark):
 
 
 def test_stage_report_matches_prefix_counts(spark):
-    """The single-pass flag-sum report must equal counting each
-    prepare_corpus_stages boundary directly (the round-6 k-pass
-    implementation it replaced), across every stage-toggle shape."""
+    """The funnel observed on one run of the chain must equal counting
+    each prepare_corpus_stages boundary directly, across every
+    stage-toggle shape."""
     from ppack_spark.operators.pipeline import (
         corpus_stage_report,
         prepare_corpus_stages,
@@ -1414,6 +1414,8 @@ def test_stage_report_matches_prefix_counts(spark):
         dict(eval_docs=eval_docs, sample_fraction=0.5),
         dict(quality=False, eval_docs=eval_docs),
         dict(line_dedup=False, exact_dedup=False, sample_fraction=0.25),
+        dict(line_dedup=False, exact_dedup=False),
+        dict(line_dedup=False, eval_docs=eval_docs),
         dict(quality=False, line_dedup=False, exact_dedup=False),
     ]
     for kw in configs:
@@ -1437,40 +1439,41 @@ def test_stage_report_empty_input(spark):
     assert [r["n_docs"] for r in rows] == [0, 0, 0, 0, 0]
 
 
-def test_stage_report_reuse_identical(spark):
-    """reuse=True (lineage-cut stage boundaries, round-11) must
-    reproduce the zero-side-effect default's counts bit-for-bit on
-    every stage-toggle shape, including the shapes where some cut
-    points are skipped (no later corpus-wide consumer) and empty
-    input."""
+def test_stage_report_counts_stages_below_an_emptied_one(spark):
+    """Quality drops every document: at run time AQE prunes the joins
+    above the empty stage, so the observations beneath them never
+    report — the input count must still come back, not be lost."""
     from ppack_spark.operators.pipeline import corpus_stage_report
+
+    docs = spark.createDataFrame(
+        [(i, "a b") for i in range(200)], "doc_id long, text string"
+    )
+    rows = corpus_stage_report(docs, eval_docs=docs).collect()
+    assert [r["n_docs"] for r in rows] == [200, 0, 0, 0, 0]
+
+
+def test_stage_report_costs_one_run_of_the_chain(spark):
+    """The report runs no more Spark jobs than executing prepare_corpus
+    itself on the same input."""
+    from ppack_spark.operators.pipeline import corpus_stage_report, prepare_corpus
     from conftest import SF_DIR
+
+    def jobs(action) -> int:
+        sched = spark.sparkContext._jsc.sc().dagScheduler()
+        first = sched.nextJobId()
+        action()
+        return sched.nextJobId() - first
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
     eval_docs = docs.filter(F.col("doc_id") % 11 == 3)
-    configs = [
-        dict(eval_docs=eval_docs),
-        dict(eval_docs=eval_docs, sample_fraction=0.5),
-        dict(quality=False, eval_docs=eval_docs),
-        dict(line_dedup=False, exact_dedup=False),
-        dict(line_dedup=False, eval_docs=eval_docs),
-        dict(quality=False, line_dedup=False, exact_dedup=False),
-    ]
-    for kw in configs:
-        want = {
-            (r["stage_idx"], r["stage"]): r["n_docs"]
-            for r in corpus_stage_report(docs, **kw).collect()
-        }
-        got = {
-            (r["stage_idx"], r["stage"]): r["n_docs"]
-            for r in corpus_stage_report(docs, reuse=True, **kw).collect()
-        }
-        assert got == want, kw
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    rows = corpus_stage_report(empty, eval_docs=empty, reuse=True).collect()
-    assert [r["n_docs"] for r in rows] == [0, 0, 0, 0, 0]
+    chain = jobs(
+        lambda: prepare_corpus(docs, eval_docs=eval_docs)
+        .write.format("noop").mode("overwrite").save()
+    )
+    report = jobs(lambda: corpus_stage_report(docs, eval_docs=eval_docs))
+    assert 0 < report <= chain
 
 
 def test_psi_report_planted_drift(spark):

@@ -114,9 +114,8 @@ QUERIES = [
     "eval_decontamination",
     "corpus_pipeline_e2e",
     "corpus_stage_report",
-    # round-11 (verdict item 4): the reuse=True pricing mode — the
-    # lineage-cut boundaries should hold exp_hi ~<= 1.0 where the
-    # zero-side-effect default's prefix re-execution bent up to 1.24
+    # the same report as corpus_stage_report; kept so the roster and
+    # its history stay comparable
     "corpus_stage_report_reuse",
     "sequence_packing",
     "corpus_split",
@@ -243,7 +242,6 @@ def _child(sf: float, sf_dir: str, out_path: str) -> None:
     only = os.environ.get("SPARK_GRAFT_SCALE_QUERIES")
     if only:
         names = [q for q in names if q in set(only.split(","))]
-        part = "1"  # name-filtered runs never re-time the OLD report
     samples: dict[str, list[float]] = {n: [] for n in names}
     failed: list[str] = []
     for _ in range(iters):
@@ -260,23 +258,6 @@ def _child(sf: float, sf_dir: str, out_path: str) -> None:
             except Exception as exc:
                 print(f"scale: {name} FAILED: {exc!r}", file=sys.stderr)
                 failed.append(name)
-        # the one cross-implementation comparison: the round-6 k-pass
-        # stage report vs this round's single-pass one, same inputs —
-        # the old version's union ran its count branches concurrently,
-        # so only a saturated cluster (the big scales here) shows the
-        # total-work difference as wall-clock
-        if part and not part.startswith("0"):
-            continue
-        try:
-            t0 = time.monotonic()
-            _old_stage_report(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.setdefault("corpus_stage_report_OLD", []).append(
-                time.monotonic() - t0
-            )
-        except Exception as exc:
-            print(f"scale: old stage report FAILED: {exc!r}", file=sys.stderr)
     calibs.append(_calib())
     spark.stop()
     with open(out_path, "w") as f:
@@ -288,33 +269,6 @@ def _child(sf: float, sf_dir: str, out_path: str) -> None:
             },
             f,
         )
-
-
-def _old_stage_report(spark, sf_dir):
-    """The pre-round-7 corpus_stage_report: one count per stage prefix
-    (kept here as the scale-comparison baseline)."""
-    from pyspark.sql import functions as F
-
-    from ppack_spark.functions.text import rewrap_lines
-    from ppack_spark.operators.pipeline import prepare_corpus_stages
-    from ppack_spark.operators.util import spread
-
-    d = spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    chunked = d.select("doc_id", rewrap_lines("text", 8).alias("text"))
-    eval_docs = chunked.filter(F.col("doc_id") % 101 == 3)
-    stages = prepare_corpus_stages(chunked, eval_docs=eval_docs)
-    parts = [
-        s.agg(F.count(F.lit(1)).cast("long").alias("n_docs")).select(
-            F.lit(i).cast("long").alias("stage_idx"),
-            F.lit(name).alias("stage"),
-            F.col("n_docs"),
-        )
-        for i, (name, s) in enumerate(stages)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
 
 
 def _suspects(raw: dict[str, dict]) -> dict[float, list[str]]:

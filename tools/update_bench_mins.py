@@ -4,6 +4,9 @@ module docstring, round-14 revision).
 
 For every gate it takes the MINIMUM positive reading found across:
 
+* the current ``BENCH_MINS.json`` itself, so a refresh only ever
+  lowers a reference (an artifact that held a gate's old minimum may
+  have been replaced since),
 * ``BENCH_local.json`` (the most recent full-roster run's 3-decimal
   detail, including any ``requeried`` solo readings), and
 * the ``parsed.queries`` maps of every committed driver artifact
@@ -43,6 +46,12 @@ def collect_mins() -> dict[str, float]:
                 continue
             if k not in mins or fv < mins[k]:
                 mins[k] = fv
+
+    try:
+        with open(os.path.join(REPO, "BENCH_MINS.json")) as f:
+            feed(json.load(f))
+    except (OSError, json.JSONDecodeError):
+        pass
 
     local = os.path.join(REPO, "BENCH_local.json")
     try:
