@@ -39,8 +39,6 @@ from .operators.asof import asof_join
 from .operators.cluster import (
     attach_cluster_ids,
     connected_components,
-    connected_components_adaptive,
-    connected_components_star,
 )
 from .operators.rangejoin import range_join_bucketed
 from .pairs import compute_pairs_dataset, sample_pair_ids, sample_pair_ids_inplan
@@ -77,8 +75,6 @@ __all__ = [
     "key_skew_report",
     "pick_blocking_spec",
     "connected_components",
-    "connected_components_adaptive",
-    "connected_components_star",
     "collect_probabilities",
     "compute_pairs_dataset",
     "dict_lookup_case_when",

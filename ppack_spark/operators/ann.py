@@ -633,7 +633,6 @@ def semantic_dedup_corpus(
     eps: float = 0.95,
     clusters: DataFrame | None = None,
     cluster_col: str = "cluster",
-    use_star: bool | None = None,
     round_digits: int = 6,
     target_bucket_size: int = 32,
 ) -> DataFrame:
@@ -674,16 +673,12 @@ def semantic_dedup_corpus(
 
     Scale shape: the quadratic work is confined to within-bucket
     pairs (an equi-join on the bucket id, never a cross product); the
-    component kernels iterate over candidate edges with
-    localCheckpoint lineage cuts (``use_star`` defaults ``None`` =
-    the adaptive kernel — cheap min-label rounds, then the
-    diameter-proof O(log n) star kernel on the label-contracted graph
-    only if needed, since semantic near-dup chains can be long;
-    ``True`` forces star, ``False`` pure min-label); the final anti-join
-    touches ids only. The embedding column itself never shuffles
-    except bucket-locally.
+    components kernel iterates over candidate edges with
+    localCheckpoint lineage cuts; the final anti-join touches ids
+    only. The embedding column itself never shuffles except
+    bucket-locally.
     """
-    from .cluster import components_kernel
+    from .cluster import connected_components
 
     if clusters is None and n_planes is None:
         import math
@@ -728,7 +723,7 @@ def semantic_dedup_corpus(
         # keeps the edge list minimal
         .dropDuplicates(["id_left", "id_right"])
     )
-    comps = components_kernel(use_star)(pairs)
+    comps = connected_components(pairs)
     losers = comps.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

@@ -7,25 +7,27 @@ builds clusters itself. Resolving accepted pairs into entity clusters
 step of a linkage/dedup pipeline (splink's ``cluster_pairwise_
 predictions_at_threshold``), so the engine provides it.
 
-Algorithm: iterative min-label propagation over the undirected edge
-set — each node repeatedly adopts the smallest component id among
-itself and its neighbours until a fixpoint. Convergence is
-O(component diameter) joins; every iteration is a shuffle on the node
-id and the lineage is cut with ``cut_lineage`` (localCheckpoint +
-flat-stats reset — see operators/util.py) so neither the plan tree nor
-Catalyst's sizeInBytes estimate grows
-unboundedly. Min-label propagation suits graphs KNOWN to be
-near-cliques (diameter 2-3 — e.g. exact-hash collision groups),
-terminating in a handful of rounds; but real near-dup graphs grow
-long transitive chains (copy-of-a-copy drift), where convergence is
-O(diameter) and the loop exhausts ``max_iter``. The alternating
-large-star/small-star variant (Kiveris et al., "Connected Components
-in MapReduce and Beyond", SoCC 2014) converges in O(log n) rounds
-regardless of diameter — provided as
-:func:`connected_components_star` with the identical
-(node, component) contract, and since round 7 it is the DEFAULT
-kernel for every production dedup chain (near_dedup_corpus,
-media_near_dedup, semantic_dedup_corpus, linkage clustering).
+One kernel, :func:`connected_components`, serves every chain. It
+observes the graph and picks its own path:
+
+* edge sets within the driver bound
+  (:func:`~ppack_spark.operators.util.bounded_collect`) are solved by
+  a driver union-find;
+* otherwise it runs a few rounds of min-label propagation (each node
+  adopts the smallest id among itself, its neighbours and its label's
+  label). Entity-sized near-cliques (diameter 2–3), the common case,
+  converge there;
+* if labels still move, the graph is contracted through the partial
+  labels and the alternating large-star/small-star algorithm (Kiveris
+  et al., "Connected Components in MapReduce and Beyond", SoCC 2014)
+  finishes it in O(log n) rounds regardless of diameter. Real near-dup
+  graphs grow long transitive chains (copy-of-a-copy drift), where
+  min-label alone is O(diameter).
+
+Every distributed round is a shuffle on the node id, and the lineage
+is cut with ``cut_lineage`` (localCheckpoint + flat-stats reset — see
+operators/util.py) so neither the plan tree nor Catalyst's
+sizeInBytes estimate grows unboundedly.
 
 Oracle: a DuckDB recursive CTE computes the reachability closure and
 takes min(reachable) per node — exponentially worse than the Spark
@@ -41,29 +43,20 @@ from .util import bounded_collect, cut_lineage
 
 __all__ = [
     "connected_components",
-    "connected_components_star",
-    "connected_components_adaptive",
-    "components_kernel",
     "attach_cluster_ids",
     "cluster_size_report",
 ]
 
-
-def components_kernel(use_star: bool | None):
-    """Shared kernel selector for the dedup/linkage chains' tri-state
-    ``use_star`` flag: ``None`` (the default everywhere) →
-    :func:`connected_components_adaptive`; ``True`` → always star;
-    ``False`` → min-label propagation only."""
-    if use_star is None:
-        return connected_components_adaptive
-    return connected_components_star if use_star else connected_components
+# Round cap of the star finisher. Star converges in O(log n) rounds,
+# so hitting the cap means something is wrong; the finisher raises
+# rather than hand out split components.
+_STAR_MAX_ROUNDS = 50
 
 
 def _label_round(e: DataFrame, labels: DataFrame) -> tuple[DataFrame, int]:
     """One min-label propagation round (neighbour min + pointer chase
-    comp[comp[v]]), returning (new_labels, changed-count). Shared by
-    :func:`connected_components` and the adaptive kernel's cheap
-    prefix rounds. ``new_labels`` is lineage-cut.
+    comp[comp[v]]), returning (new_labels, changed-count).
+    ``new_labels`` is lineage-cut.
 
     The changed-count rides THROUGH the aggregation instead of joining
     new labels back to old (r14 optimization, guide §2.4): each node's
@@ -101,83 +94,13 @@ def _label_round(e: DataFrame, labels: DataFrame) -> tuple[DataFrame, int]:
     return agg.select("node", "component"), changed
 
 
-def connected_components(
-    edges: DataFrame,
-    id_left: str = "id_left",
-    id_right: str = "id_right",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Resolve undirected edges into components.
-
-    Returns ``(node, component)`` where ``component`` is the smallest
-    node id in the node's connected component. Only nodes appearing in
-    at least one edge are returned (singletons are their own component
-    by definition and need no resolution).
-
-    Symmetrized edge sets within the driver bound
-    (:func:`~ppack_spark.operators.util.bounded_collect`) are solved
-    with the driver union-find (:func:`_driver_components`) instead of
-    distributed rounds — identical output, none of the per-round job
-    overhead.
-    """
-    # materialize the narrow edge projection once: the symmetrizing
-    # union's two legs (and nothing else) would otherwise each
-    # re-execute the caller's whole edge-derivation chain — for the
-    # dedup gates that is the LSH/verify pipeline, twice
-    raw = edges.select(
-        F.col(id_left).alias("src"), F.col(id_right).alias("dst")
-    ).localCheckpoint(eager=False)
-    # symmetrize once; propagation then only needs one direction
-    e, rows = bounded_collect(
-        raw.unionByName(
-            raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        "src",
-        "dst",
-    )
-    if rows is not None:
-        solved = _driver_components(e, rows)
-        if solved is not None:
-            return solved
-
-    labels = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("component")
-    )
-    changed = -1
-    # pointer chasing (comp[comp[v]], inside _label_round): one extra
-    # equi-join of the (tiny, checkpointed) label table per round.
-    # Helps when label chains align with the min-id gradient (measured
-    # 10 → 4 rounds on the sf0.1 semantic-dedup chain graph) but does
-    # NOT guarantee O(log d): where labels rest at local minima the
-    # chase gains little, and convergence trends back toward
-    # O(diameter). The round-7 scale proof hit this on a replicated
-    # media corpus — three ~2000-node chain-of-blob components of
-    # BFS diameter ~34 left 48 labels still moving at round 30.
-    # Production chains therefore default to the ADAPTIVE kernel
-    # (:func:`connected_components_adaptive`), which pays these cheap
-    # rounds only while they converge and escalates to star otherwise.
-    for _ in range(max_iter):
-        labels, changed = _label_round(e, labels)
-        if changed == 0:
-            break
-    if changed != 0:
-        # Silent partial propagation would hand out WRONG (split)
-        # component ids for any component with diameter > max_iter.
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            f"iterations ({changed} labels still changing); raise max_iter "
-            "(diameter-bound) or switch to the large-star/small-star variant"
-        )
-    return labels
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """large-star(u): every strictly-larger neighbour of u links to
     m = min(Γ(u) ∪ {u}) (Kiveris et al. SoCC'14, Alg. 2 map/reduce as
     a groupBy-min + self-join — no per-node neighbour lists).
 
     PRECONDITION (maintained by the star loop, established by the
-    caller's up-front orientation pass): ``e`` is strictly oriented
+    finisher's orientation of its input): ``e`` is strictly oriented
     (src > dst on every row) and duplicate-free. The symmetrized
     union is then duplicate-free BY CONSTRUCTION — the original half
     has src > dst, the reversed half src < dst, so the r14
@@ -205,7 +128,7 @@ def _small_star(e: DataFrame) -> DataFrame:
 
     PRECONDITION: ``e`` strictly oriented (src > dst) and
     duplicate-free — true for :func:`_large_star` output and for the
-    star loop's normalized input, so the greatest/least
+    star loop's oriented input, so the greatest/least
     re-orientation + ``distinct`` this step used to pay per round is
     a no-op and was dropped (r14). Output rows are strictly oriented
     (every emitted dst is a group minimum strictly below the src) and
@@ -220,16 +143,12 @@ def _small_star(e: DataFrame) -> DataFrame:
     return nbr.unionByName(own).distinct()
 
 
-def _driver_components(
-    e: DataFrame, edges: list, nodes: list | tuple = ()
-) -> DataFrame | None:
+def _driver_components(e: DataFrame, edges: list) -> DataFrame | None:
     """Solve a SMALL component graph on the driver: path-compressed
     union-find with union-by-min, so each root is the minimum id seen
-    in its tree and the output is exactly the distributed kernels'
+    in its tree and the output is exactly the distributed path's
     (node, min-member-id) contract. ``edges`` are the collected
-    ``(src, dst)`` rows of ``e``; ``nodes`` contributes extra isolated
-    nodes beyond the edge endpoints (the star kernel's self-loop-only
-    nodes).
+    ``(src, dst)`` rows of ``e``.
 
     Returns ``None`` — caller falls back to the distributed kernel —
     when any endpoint is NULL (equi-join NULL semantics are not worth
@@ -247,10 +166,6 @@ def _driver_components(
             parent[x], x = r, parent[x]
         return r
 
-    for v in nodes:
-        if v is None:
-            return None
-        parent.setdefault(v, v)
     for a, b in edges:
         if a is None or b is None:
             return None
@@ -283,107 +198,67 @@ def _edge_signature(e: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components_star(
-    edges: DataFrame,
-    id_left: str = "id_left",
-    id_right: str = "id_right",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014): converges in O(log n) rounds regardless of component
-    DIAMETER, unlike min-label propagation's O(diameter) rounds —
-    the swap-in for adversarial long-chain graphs.
+def _star_finish(oriented: DataFrame) -> DataFrame:
+    """Finish a contracted graph with alternating large-star/small-star
+    rounds: returns ``(node, component)`` with component = the min
+    node id of its component, for at least every node that is not its
+    component's min (the distributed fixpoint leaves the min out; the
+    caller's coalesce maps it to itself).
 
-    Same contract as :func:`connected_components`: returns
-    ``(node, component)`` with component = min node id, only for nodes
-    appearing in an edge; raises on non-convergence. Each round is two
+    ``oriented`` must be strictly oriented (src > dst) and
+    duplicate-free, as :func:`_large_star` requires. Each round is two
     groupBy-min + self-join passes over the (shrinking) edge set, with
-    ``cut_lineage`` lineage cuts (localCheckpoint + flat-stats reset)."""
-    # materialize the narrow edge projection once: the node census and
-    # the orientation pass below are separate jobs, and each would
-    # otherwise re-execute the caller's whole edge-derivation chain
-    raw = edges.select(
-        F.col(id_left).alias("src"), F.col(id_right).alias("dst")
-    ).localCheckpoint(eager=False)
-    nodes = (
-        raw.select("src")
-        .unionByName(raw.select(F.col("dst").alias("src")))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    # strict (greatest, least) orientation up front: the loop's
-    # _large_star/_small_star passes rely on it to skip their
-    # per-round re-orientation/dedup exchanges (see their docstrings);
-    # for undirected edges the orientation changes nothing semantically
-    e, rows = bounded_collect(
-        raw.select(
-            F.greatest(F.col("src"), F.col("dst")).alias("src"),
-            F.least(F.col("src"), F.col("dst")).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct(),
-        "src",
-        "dst",
-    )
+    ``cut_lineage`` lineage cuts; at the fixpoint every edge is a star
+    edge node → component-min. Raises if the fixpoint is not reached
+    within ``_STAR_MAX_ROUNDS``."""
+    e, rows = bounded_collect(oriented, "src", "dst")
     if rows is not None:
-        solved = _driver_components(e, rows, [r[0] for r in nodes.collect()])
+        solved = _driver_components(e, rows)
         if solved is not None:
             return solved
     sig = _edge_signature(e)
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         e = cut_lineage(_small_star(_large_star(e)))
         new_sig = _edge_signature(e)
         if new_sig == sig:
-            converged = True
-            break
+            return e.select(
+                F.col("src").alias("node"), F.col("dst").alias("component")
+            )
         sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"max_iter={max_iter} rounds"
-        )
-    # fixpoint edges are stars (node → component-min); roots and
-    # isolated-after-dedup nodes map to themselves
-    labels = e.select("src", F.col("dst").alias("component"))
-    return (
-        nodes.join(labels, on="src", how="left")
-        .select(
-            F.col("src").alias("node"),
-            F.coalesce(F.col("component"), F.col("src")).alias("component"),
-        )
+    raise RuntimeError(
+        f"connected_components: the star finisher did not converge within "
+        f"{_STAR_MAX_ROUNDS} rounds"
     )
 
 
-def connected_components_adaptive(
+def connected_components(
     edges: DataFrame,
     id_left: str = "id_left",
     id_right: str = "id_right",
     label_rounds: int = 3,
-    max_iter: int = 50,
 ) -> DataFrame:
-    """Hybrid components kernel: a few min-label rounds first, star
-    only on demand.
+    """Resolve undirected edges into components.
 
-    Real dedup graphs are overwhelmingly entity-sized near-cliques
-    (diameter 2–3) where min-label propagation converges in 2–3 of its
-    cheap rounds — always paying the star kernel's two groupBy-min +
-    self-join passes per round there cost the round-7 bench ~1.8–2.0×
-    across the near-dedup family. But adversarial chain components
-    (copy-of-a-copy drift; the round-7 scale proof's diameter-34 media
-    chains) make pure min-label O(diameter). This kernel takes both
-    ends of the trade:
+    Returns ``(node, component)`` where ``component`` is the smallest
+    node id in the node's connected component. Only nodes appearing in
+    at least one edge are returned (singletons are their own component
+    by definition and need no resolution).
 
-    1. run ``label_rounds`` rounds of min-label propagation (the
-       common case converges here and never touches star);
-    2. if labels still move, CONTRACT the graph through the partial
+    The kernel picks its path from what it observes (see the module
+    docstring):
+
+    1. a symmetrized edge set within the driver bound is solved by the
+       driver union-find (:func:`_driver_components`) — identical
+       output, none of the per-round job overhead;
+    2. otherwise run up to ``label_rounds`` rounds of min-label
+       propagation; the common near-clique case converges here;
+    3. if labels still move, CONTRACT the graph through the partial
        labels — map each edge ``(u, v)`` to ``(label[u], label[v])``,
-       drop self-loops, distinct — and finish with the O(log n)
-       :func:`connected_components_star` on the contracted edge set,
-       which is smaller by the factor the label rounds already
-       collapsed (near-clique regions shrink to single nodes, so only
-       the chain skeleton pays star rounds).
+       drop self-loops, orient, distinct — and finish with the
+       O(log n) star rounds (:func:`_star_finish`) on the contracted
+       edge set, which is smaller by the factor the label rounds
+       already collapsed (near-clique regions shrink to single nodes,
+       so only the chain skeleton pays star rounds).
 
     Correctness of the composition: labels are minima over observed
     member ids, so every partial label IS a node id inside its
@@ -393,15 +268,20 @@ def connected_components_adaptive(
     has the same component structure over a subset of node ids that
     includes each component's min, star returns that min, and
     ``final[node] = star_component[label[node]]`` (coalesced to the
-    label itself where its group was already fully collapsed) is the
-    exact (node, min-member-id) contract of the other two kernels —
-    gated against the same recursive-CTE oracle.
+    label itself where the label is a component min) is the exact
+    (node, min-member-id) contract — gated against the recursive-CTE
+    oracle by ``dedup_clusters`` (default rounds) and
+    ``dedup_clusters_adaptive`` (``label_rounds=1``, which forces the
+    contract-then-star path).
     """
-    # same single-evaluation cut as connected_components: both
-    # symmetrizing legs read the materialized projection
+    # materialize the narrow edge projection once: the symmetrizing
+    # union's two legs (and nothing else) would otherwise each
+    # re-execute the caller's whole edge-derivation chain — for the
+    # dedup gates that is the LSH/verify pipeline, twice
     raw = edges.select(
         F.col(id_left).alias("src"), F.col(id_right).alias("dst")
     ).localCheckpoint(eager=False)
+    # symmetrize once; propagation then only needs one direction
     e, rows = bounded_collect(
         raw.unionByName(
             raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -417,7 +297,15 @@ def connected_components_adaptive(
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("component")
     )
-    changed = -1
+    # pointer chasing (comp[comp[v]], inside _label_round): one extra
+    # equi-join of the (tiny, checkpointed) label table per round.
+    # Helps when label chains align with the min-id gradient (measured
+    # 10 → 4 rounds on the sf0.1 semantic-dedup chain graph) but does
+    # NOT guarantee O(log d): where labels rest at local minima the
+    # chase gains little, and convergence trends back toward
+    # O(diameter) — the round-7 scale proof's ~2000-node chain-of-blob
+    # media components (BFS diameter ~34) left 48 labels moving at
+    # round 30. Hence only a few rounds, then star.
     for _ in range(max(label_rounds, 1)):
         labels, changed = _label_round(e, labels)
         if changed == 0:
@@ -429,17 +317,19 @@ def connected_components_adaptive(
     lab_dst = labels.select(
         F.col("node").alias("dst"), F.col("component").alias("__ld")
     )
+    # e is symmetrized, so both orientations of a contracted edge
+    # appear; strict orientation + distinct keeps one
     contracted = (
         e.join(lab_src, "src")
         .join(lab_dst, "dst")
-        .select(F.col("__ls").alias("src"), F.col("__ld").alias("dst"))
+        .select(
+            F.greatest("__ls", "__ld").alias("src"),
+            F.least("__ls", "__ld").alias("dst"),
+        )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(cut_lineage)
     )
-    meta = connected_components_star(
-        contracted, "src", "dst", max_iter=max_iter
-    ).select(
+    meta = _star_finish(contracted).select(
         F.col("node").alias("__lbl"), F.col("component").alias("__meta")
     )
     return (

@@ -712,7 +712,6 @@ def near_dup_components(
     num_hashes: int = 8,
     band_size: int = 2,
     k: int = 3,
-    use_star: bool | None = None,
     verify_threshold: float | None = 0.5,
     exact_verify: bool = False,
     max_bucket_size: int | None = None,
@@ -731,7 +730,7 @@ def near_dup_components(
     the verify stage are written once. See :func:`near_dedup_corpus`
     for the parameter semantics and the 100 TB scale shape.
     """
-    from .cluster import components_kernel
+    from .cluster import connected_components
 
     if exact_verify and verify_threshold is None:
         raise ValueError(
@@ -782,7 +781,7 @@ def near_dup_components(
                 )
                 .select("id_left", "id_right")
             )
-    return components_kernel(use_star)(pairs)
+    return connected_components(pairs)
 
 
 def near_dedup_corpus(
@@ -792,7 +791,6 @@ def near_dedup_corpus(
     num_hashes: int = 8,
     band_size: int = 2,
     k: int = 3,
-    use_star: bool | None = None,
     verify_threshold: float | None = 0.5,
     exact_verify: bool = False,
     max_bucket_size: int | None = None,
@@ -820,23 +818,6 @@ def near_dedup_corpus(
     ``merge_corpus_delta_fuzzy``), for when the estimator's ±1/√h
     noise matters more than a second pass over candidate documents.
 
-    ``use_star`` (default ``None`` = adaptive) resolves components
-    with :func:`~ppack_spark.operators.cluster.
-    connected_components_adaptive`: a few cheap min-label rounds —
-    which already finish the entity-sized near-cliques that dominate
-    real corpora — then, only if labels still move, the graph is
-    contracted through the partial labels and the O(log n)
-    large-star/small-star kernel finishes the (far smaller) chain
-    skeleton. Near-dup graphs routinely contain long transitive
-    chains (forum mirrors, templated pages, scraped syndication
-    networks) whose diameter exceeds what min-label propagation
-    converges on — the round-7 scale proof hit exactly that on a
-    replicated corpus (media chain, 48 labels still moving after 30
-    rounds) — while always paying the star kernel cost the round-7
-    bench ~2× across this family. ``use_star=True`` forces star from
-    round one; ``use_star=False`` keeps pure min-label for graphs the
-    caller KNOWS are near-cliques (diameter 2-3).
-
     Scale shape: signatures are computed ONCE (:func:`minhash_signatures`)
     and feed both the banded candidate equi-join and the estimate
     verify — the shingle→md5 map pass, the dominant cost, is never
@@ -851,7 +832,7 @@ def near_dedup_corpus(
         if components is not None
         else near_dup_components(
             df, text_col, id_col, num_hashes, band_size, k,
-            use_star, verify_threshold, exact_verify, max_bucket_size,
+            verify_threshold, exact_verify, max_bucket_size,
         )
     )
     losers = comps.filter(F.col("node") != F.col("component")).select(
@@ -868,7 +849,6 @@ def near_dedup_keep_best(
     num_hashes: int = 8,
     band_size: int = 2,
     k: int = 3,
-    use_star: bool | None = None,
     verify_threshold: float | None = 0.5,
     exact_verify: bool = False,
     max_bucket_size: int | None = None,
@@ -901,7 +881,7 @@ def near_dedup_keep_best(
         if components is not None
         else near_dup_components(
             df, text_col, id_col, num_hashes, band_size, k,
-            use_star, verify_threshold, exact_verify, max_bucket_size,
+            verify_threshold, exact_verify, max_bucket_size,
         )
     )
     members = comps.join(

@@ -187,7 +187,6 @@ def media_near_dedup(
     block_col: str = "kind",
     max_hamming: int = 6,
     bits: int = _DHASH_BITS,
-    use_star: bool | None = None,
 ) -> DataFrame:
     """Media-column twin of the text ``near_dedup_corpus``: perceptual
     near-duplicate pairs (:func:`phash_near_dup_pairs`) → connected
@@ -201,24 +200,13 @@ def media_near_dedup(
     only (id, block, 64-bit phash) ever shuffles — payload bytes stay
     at the scan until the final anti-join projects the survivors;
     components iterate over id-pair edges with lineage cuts.
-
-    ``use_star`` defaults ``None`` = the adaptive kernel (cheap
-    min-label rounds first, star escalation on the contracted graph
-    only if labels still move). Re-encoded media forms DEEP Hamming
-    components (copy-of-a-copy drift — each hop <= max_hamming but
-    the ends far apart): the round-7 scale proof caught pure
-    min-label failing to converge on exactly this (a replicated
-    corpus produced ~2000-node chain-of-blob components of BFS
-    diameter ~34, past the default round budget), which the adaptive
-    kernel's star escalation handles. ``use_star=True`` forces star
-    from round one; ``False`` keeps pure min-label.
     """
-    from .cluster import components_kernel
+    from .cluster import connected_components
 
     pairs = phash_near_dup_pairs(
         media, id_col, hex_col, block_col, max_hamming, bits
     ).select("id_left", "id_right")
-    comps = components_kernel(use_star)(pairs)
+    comps = connected_components(pairs)
     losers = comps.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

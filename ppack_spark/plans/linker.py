@@ -252,44 +252,17 @@ class Linker:
         )
 
     # --- cluster resolution -------------------------------------------
-    @staticmethod
-    def _cc(algorithm: str):
-        """Pick the components kernel. ``adaptive`` (default): a few
-        min-label rounds (which already finish entity-sized
-        near-clique graphs), then star on the label-contracted graph
-        only if labels still move — the both-ends-of-the-trade default
-        since round 8. ``star``: alternating large-star/small-star
-        (Kiveris SoCC'14) from round one — O(log n) rounds independent
-        of diameter (a low threshold chains entities; the round-6 A-B
-        gate and the round-7 scale proof both hit diameter blowups).
-        ``label``: pure min-label propagation — O(diameter) rounds,
-        cheapest per round, for graphs known to be entity-sized
-        near-cliques. All three kernels are gated to the same
-        recursive-CTE oracle: `dedup_clusters` / `dedup_clusters_star`
-        / `dedup_clusters_adaptive`."""
-        from ..operators.cluster import (
-            connected_components,
-            connected_components_adaptive,
-            connected_components_star,
-        )
-
-        kernels = {
-            "label": connected_components,
-            "star": connected_components_star,
-            "adaptive": connected_components_adaptive,
-        }
-        if algorithm not in kernels:
-            raise ValueError(
-                f"algorithm must be 'adaptive', 'label' or 'star', got {algorithm!r}"
-            )
-        return kernels[algorithm]
-
-    def cluster(self, threshold: float = 5.0, algorithm: str = "adaptive") -> DataFrame:
+    def cluster(self, threshold: float = 5.0) -> DataFrame:
         """Resolve pairs with weight > ``threshold`` into entity
         clusters (connected components; the post-linkage step the
         reference leaves to its ground-truth ``cluster`` column,
         scratch.R:131-133). Returns data_a plus a ``cluster_id``
-        column; unmatched records are singleton clusters.
+        column (the min member id); unmatched records are singleton
+        clusters. The one components kernel,
+        :func:`~ppack_spark.operators.cluster.connected_components`,
+        picks its own path: driver union-find within the driver bound,
+        otherwise min-label rounds with a star finish on the
+        contracted graph when labels still move.
 
         Self-link (dedup) only: a two-dataset link's edge list mixes
         two id namespaces, and feeding it to connected_components
@@ -305,15 +278,15 @@ class Linker:
                 "data_a and data_b that share an id value"
             )
         from ..exprs import suffixed
-        from ..operators.cluster import attach_cluster_ids
+        from ..operators.cluster import attach_cluster_ids, connected_components
 
         id_l = suffixed(self.spec.unique_id_left, "_left")
         id_r = suffixed(self.spec.unique_id_right, "_right")
         edges = self.score().filter(F.col("weight") > threshold).select(id_l, id_r)
-        components = self._cc(algorithm)(edges, id_l, id_r)
+        components = connected_components(edges, id_l, id_r)
         return attach_cluster_ids(self.data_a, components, self.spec.unique_id_left)
 
-    def cluster_links(self, threshold: float = 5.0, algorithm: str = "adaptive") -> DataFrame:
+    def cluster_links(self, threshold: float = 5.0) -> DataFrame:
         """Two-dataset-safe cluster resolution. Node ids are prefixed
         with a source-dataset tag (``a:``/``b:``, the splink
         disambiguation) before connected components, so overlapping id
@@ -326,6 +299,7 @@ class Linker:
         the ``a:`` tag and the result equals ``cluster()`` up to the
         label representation)."""
         from ..exprs import suffixed
+        from ..operators.cluster import connected_components
 
         id_l = suffixed(self.spec.unique_id_left, "_left")
         id_r = suffixed(self.spec.unique_id_right, "_right")
@@ -338,7 +312,7 @@ class Linker:
                 F.concat(F.lit(tag_r), F.col(id_r).cast("string")).alias("node_r"),
             )
         )
-        components = self._cc(algorithm)(edges, "node_l", "node_r")
+        components = connected_components(edges, "node_l", "node_r")
 
         out_col = self.spec.unique_id_left  # both sides aligned on one name
 

@@ -1947,7 +1947,11 @@ def linkage_ab_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive closure, and both singleton-coalescing attach joins.
     Reference parity: scratch.R:143-156 (NCVR A-B linkage) +
     cluster-side resolution the reference leaves to its ground-truth
-    column (scratch.R:131-133)."""
+    column (scratch.R:131-133). At sf0.01 and sf0.1 the edge set
+    (~10.8k symmetrized rows at sf0.1) is below the driver bound, so
+    the components step here is the driver union-find; the distributed
+    path is covered by the ``distributed(...)`` parity tests in
+    tests/test_cluster.py."""
     from ..em import FSParams
     from ..spec import BlockingRule, Comparison, LinkerSpec
     from .linker import Linker
@@ -1993,12 +1997,7 @@ def linkage_ab_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         lam=1e-4,
         total_pairs=float(cust.count()) * supp.count(),
     )
-    # star, not label propagation: the acctbal-band graph chains
-    # customers through shared suppliers into ONE high-diameter
-    # component at sf0.1 (min-label + pointer doubling exhausted 30
-    # rounds with 282 labels still moving); large-star/small-star
-    # contracts it in O(log n) rounds regardless of diameter.
-    return linker.cluster_links(threshold=1.0, algorithm="star").select(
+    return linker.cluster_links(threshold=1.0).select(
         "source", F.col("c_custkey").cast("string").alias("c_custkey"), "cluster_id"
     )
 
@@ -2230,19 +2229,21 @@ def blocking_estimate_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 def linkage_ab_clusters_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`linkage_ab_clusters`' cluster-resolution half on the
     estimator-picked LINEAR spec (round-9 verdict item 4): the same
-    Linker → cluster_links → star-contraction chain, but blocked by
-    the two banded-balance equi passes `two_dataset_linkage_scaled`
-    proved to sf1 — (nationkey, floor(bal/10)) then (floor(bal),) —
+    Linker → cluster_links chain, but blocked by the two
+    banded-balance equi passes `two_dataset_linkage_scaled` proved to
+    sf1 — (nationkey, floor(bal/10)) then (floor(bal),) —
     so the pair budget (and with it the edge set feeding connected
     components) grows ~n instead of the region spec's ~n²/5. Edges
     are pairs with |balance delta| < 10 (FS weight > 1 under the
     fixed close/near parameters); the balance-band graph still chains
-    customers through shared suppliers into high-diameter components,
-    which is exactly what the large-star/small-star kernel contracts
-    in O(log n) rounds. Output and oracle shape match
-    `linkage_ab_clusters`: every record of BOTH datasets with its
-    source-tagged min-label cluster id, singletons = own tagged id;
-    the oracle replays the banded blocking, the threshold, and the
+    customers through shared suppliers into high-diameter components.
+    At sf0.01 and sf0.1 that graph is below the driver bound, so the
+    components step is the driver union-find (the distributed path is
+    covered by the ``distributed(...)`` parity tests); past the bound
+    the kernel's star finisher handles the high diameter. Output and
+    oracle shape match `linkage_ab_clusters`: every record of BOTH
+    datasets with its source-tagged min-label cluster id, singletons =
+    own tagged id; the oracle replays the banded blocking, the threshold, and the
     recursive closure. Reference parity: scratch.R:143-156 re-specced
     the way a 100 TB user would."""
     from ..em import FSParams
@@ -2285,7 +2286,7 @@ def linkage_ab_clusters_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         lam=1e-4,
         total_pairs=float(cust.count()) * supp.count(),
     )
-    return linker.cluster_links(threshold=1.0, algorithm="star").select(
+    return linker.cluster_links(threshold=1.0).select(
         "source", F.col("c_custkey").cast("string").alias("c_custkey"), "cluster_id"
     )
 

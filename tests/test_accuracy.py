@@ -239,21 +239,6 @@ def test_ab_linkage_no_id_conflation(fitted_ab_linker):
     assert conflated == []
 
 
-def test_cluster_star_kernel_parity(fitted_linker):
-    """cluster(algorithm='star') must produce the identical partition
-    and labels as the default min-label kernel (both contract
-    component = min node id)."""
-    base = {
-        (r["rec_id"], r["cluster_id"])
-        for r in fitted_linker.cluster(threshold=5.0).collect()
-    }
-    star = {
-        (r["rec_id"], r["cluster_id"])
-        for r in fitted_linker.cluster(threshold=5.0, algorithm="star").collect()
-    }
-    assert base == star
-
-
 def test_em_learned_informative_params(fitted_linker):
     """The EM must land on the informative fixed point: m(full/strong
     agreement) ≫ u, positive weights for agreement levels, λ near the

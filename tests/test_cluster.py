@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import deque
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,16 +11,61 @@ from conftest import distributed, spy_driver_paths
 
 import ppack_spark as pp
 import ppack_spark.operators.cluster as cluster
-from ppack_spark.operators.cluster import (
-    attach_cluster_ids,
-    connected_components,
-    connected_components_adaptive,
-    connected_components_star,
-)
+from ppack_spark.operators.cluster import attach_cluster_ids, connected_components
 
 
 def _components_dict(df):
     return {r["node"]: r["component"] for r in df.collect()}
+
+
+def _reference_components(edges):
+    """Independent reference: breadth-first search over the undirected
+    edge list, mapping every node to the min id of its component."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: dict = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, frontier = {start}, deque([start])
+        while frontier:
+            for nb in adj[frontier.popleft()]:
+                if nb not in comp:
+                    comp.add(nb)
+                    frontier.append(nb)
+        root = min(comp)
+        out.update((v, root) for v in comp)
+    return out
+
+
+def _assert_matches_reference(spark, rows, schema="id_left long, id_right long"):
+    """The kernel's output equals the reference on the driver path
+    (default), on the distributed path with the default label rounds,
+    and on the distributed path with ``label_rounds=1``, which sends
+    any graph one round does not finish through the star finisher."""
+    df = spark.createDataFrame(rows, schema)
+    want = _reference_components(rows)
+    assert _components_dict(connected_components(df)) == want
+    assert _components_dict(distributed(connected_components, df)) == want
+    assert (
+        _components_dict(distributed(connected_components, df, label_rounds=1))
+        == want
+    )
+
+
+def _chain_of_blobs(k=4, c=40):
+    """The round-7 scale-proof topology, minimized: ``c`` ``k``-cliques
+    chained by bridges, ids scattered (diameter ~2c)."""
+    perm = {i: (i * 73) % (k * c) for i in range(k * c)}  # id scatter
+    edges = []
+    for b in range(c):
+        ids = [perm[b * k + j] for j in range(k)]
+        edges += [(a, bb) for a in ids for bb in ids if a < bb]
+        if b:
+            edges.append((perm[(b - 1) * k], perm[b * k]))  # bridge
+    return edges
 
 
 def test_chain_triangle_and_separate_components(spark):
@@ -32,13 +79,9 @@ def test_chain_triangle_and_separate_components(spark):
 
 
 def test_long_chain_converges(spark):
-    n = 40  # diameter >> typical dedup components; exercises the loop
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "id_left long, id_right long"
-    )
-    got = _components_dict(connected_components(edges, max_iter=60))
-    assert set(got.values()) == {0}
-    assert len(got) == n + 1
+    """A diameter-40 chain, far past the label rounds: the distributed
+    path must escalate to the star finisher and still agree."""
+    _assert_matches_reference(spark, [(i, i + 1) for i in range(40)])
 
 
 def test_cut_lineage_keeps_stats_flat_across_self_join_rounds(spark):
@@ -77,218 +120,133 @@ def test_cut_lineage_keeps_stats_flat_across_self_join_rounds(spark):
     assert labels.count() == 50
 
 
-def test_star_variant_matches_label_propagation(spark):
-    """large-star/small-star must produce the identical (node,
-    component) mapping as min-label propagation on a mixed fixture."""
-    edges = spark.createDataFrame(
+def test_kernel_matches_reference_with_self_loops(spark):
+    """Mixed components plus a self-loop-only node (7, 7), which must
+    come back as its own component."""
+    _assert_matches_reference(
+        spark,
         [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (11, 12), (20, 21), (7, 7)],
-        "id_left long, id_right long",
-    )
-    assert _components_dict(connected_components_star(edges)) == _components_dict(
-        connected_components(edges)
     )
 
 
-def test_star_variant_long_chain_logarithmic_rounds(spark):
-    """A diameter-300 chain: min-label propagation needs ~300 rounds
-    (and raises at max_iter=30); the star variant converges within a
-    logarithmic round budget."""
+def test_star_variant_long_chain_logarithmic_rounds(spark, monkeypatch):
+    """A diameter-300 chain: min-label propagation would need ~300
+    rounds; after one label round the star finisher must resolve the
+    contracted chain within a logarithmic round cap."""
+    monkeypatch.setattr(cluster, "_STAR_MAX_ROUNDS", 15)
     n = 300
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_left long, id_right long"
     )
-    got = _components_dict(connected_components_star(edges, max_iter=15))
-    assert set(got.values()) == {0}
-    assert len(got) == n + 1
+    got = _components_dict(distributed(connected_components, edges, label_rounds=1))
+    assert got == {i: 0 for i in range(n + 1)}
 
 
 def test_star_variant_random_graph_parity(spark):
-    """Deterministic pseudo-random graph: both algorithms agree."""
-    rows = [((i * 131 + 7) % 97, (i * 31 + 3) % 97) for i in range(120)]
-    edges = spark.createDataFrame(rows, "id_left long, id_right long")
-    assert _components_dict(connected_components_star(edges)) == _components_dict(
-        connected_components(edges, max_iter=60)
+    """Deterministic pseudo-random multigraph (duplicate and reversed
+    edges, self-loops)."""
+    _assert_matches_reference(
+        spark, [((i * 131 + 7) % 53, (i * 31 + 3) % 53) for i in range(150)]
     )
 
 
-def test_chain_of_blobs_star_within_log_rounds(spark):
-    """The round-7 scale-proof topology, minimized: replicated dup
-    groups welded into chain-of-blob components (the sf0.2 media graph
-    had three ~2000-node components of BFS diameter ~34, on which
-    min-label propagation left 48 labels moving at round 30). 40
-    4-cliques chained by bridges, ids scattered: the star kernel must
-    resolve it within its logarithmic round budget and agree with
-    (slow, high-budget) label propagation."""
-    k, c = 4, 40  # clique size, clique count → diameter ~2c
-    perm = {i: (i * 73) % (k * c) for i in range(k * c)}  # id scatter
-    edges = []
-    for b in range(c):
-        ids = [perm[b * k + j] for j in range(k)]
-        edges += [(a, bb) for a in ids for bb in ids if a < bb]
-        if b:
-            edges.append((perm[(b - 1) * k], perm[b * k]))  # bridge
-    df = spark.createDataFrame(edges, "id_left long, id_right long")
-    star = _components_dict(connected_components_star(df, max_iter=15))
-    assert set(star.values()) == {0}
-    assert len(star) == k * c
-    assert star == _components_dict(connected_components(df, max_iter=200))
-
-
-def test_production_dedup_chains_default_to_adaptive_kernel():
-    """Every production dedup/cluster entry point must default to the
-    ADAPTIVE kernel (use_star=None / algorithm="adaptive"): cheap
-    min-label rounds with star escalation on non-convergence — both
-    diameter-proof (regression pin for the round-7 sf0.2 media-chain
-    non-convergence) and free of the always-star ~2× bench tax the
-    round-7 near-dedup family paid. Pure min-label and always-star
-    stay opt-in."""
-    import inspect
-
-    from ppack_spark.operators.ann import semantic_dedup_corpus
-    from ppack_spark.operators.dedup import (
-        near_dedup_corpus,
-        near_dedup_keep_best,
-        near_dup_components,
-    )
-    from ppack_spark.operators.multimodal import media_near_dedup
-    from ppack_spark.plans.linker import Linker
-
-    for fn in (
-        near_dup_components,
-        near_dedup_corpus,
-        near_dedup_keep_best,
-        media_near_dedup,
-        semantic_dedup_corpus,
-    ):
-        assert inspect.signature(fn).parameters["use_star"].default is None, fn
-    for fn in (Linker.cluster, Linker.cluster_links):
-        assert (
-            inspect.signature(fn).parameters["algorithm"].default == "adaptive"
-        ), fn
+def test_chain_of_blobs_star_within_log_rounds(spark, monkeypatch):
+    """The round-7 scale-proof topology (the sf0.2 media graph had
+    three ~2000-node chain-of-blob components of BFS diameter ~34, on
+    which min-label propagation left 48 labels moving at round 30):
+    the kernel must resolve it with the star finisher held to a
+    logarithmic round cap."""
+    monkeypatch.setattr(cluster, "_STAR_MAX_ROUNDS", 15)
+    edges = _chain_of_blobs()
+    assert set(_reference_components(edges).values()) == {0}
+    _assert_matches_reference(spark, edges)
 
 
 def test_adaptive_kernel_shallow_graph_skips_star(spark, monkeypatch):
-    """On a near-clique graph the adaptive kernel must finish inside
-    its min-label prefix and NEVER call the star kernel — that is the
-    entire point of the hybrid (the round-7 bench paid ~2× for star
-    on graphs like this)."""
-    from ppack_spark.operators import cluster as C
+    """On a near-clique graph the distributed path must finish inside
+    its min-label rounds and NEVER call the star finisher — the round-7
+    bench paid ~2× for star on graphs like this."""
 
     def _boom(*a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("star kernel called for a near-clique graph")
+        raise AssertionError("star finisher called for a near-clique graph")
 
-    monkeypatch.setattr(C, "connected_components_star", _boom)
+    monkeypatch.setattr(cluster, "_star_finish", _boom)
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12)],
         "id_left long, id_right long",
     )
-    got = _components_dict(C.connected_components_adaptive(edges))
+    got = _components_dict(distributed(connected_components, edges))
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}
 
 
-def test_adaptive_kernel_deep_chain_escalates_and_agrees(spark):
-    """The round-7 scale-proof topology again (chain of 4-cliques,
-    diameter ~80): the adaptive kernel's min-label prefix cannot
-    finish in 3 rounds, so it must contract and escalate to star —
-    and the composed result must equal both reference kernels."""
-    k, c = 4, 40
-    perm = {i: (i * 73) % (k * c) for i in range(k * c)}
-    edges = []
-    for b in range(c):
-        ids = [perm[b * k + j] for j in range(k)]
-        edges += [(a, bb) for a in ids for bb in ids if a < bb]
-        if b:
-            edges.append((perm[(b - 1) * k], perm[b * k]))
+def test_adaptive_kernel_deep_chain_escalates_and_agrees(spark, monkeypatch):
+    """Chain of 4-cliques, diameter ~80: three label rounds cannot
+    finish it, so the distributed path must contract and hand the
+    result to the star finisher (a second driver-or-distributed
+    decision), and the composed result must equal the reference."""
+    edges = _chain_of_blobs()
     df = spark.createDataFrame(edges, "id_left long, id_right long")
-    got = _components_dict(connected_components_adaptive(df))
-    assert set(got.values()) == {0}
-    assert len(got) == k * c
-    assert got == _components_dict(connected_components_star(df, max_iter=15))
+    paths = spy_driver_paths(monkeypatch, cluster)
+    got = _components_dict(distributed(connected_components, df))
+    assert got == _reference_components(edges)
+    assert paths == ["distributed", "distributed"]
 
 
 def test_adaptive_kernel_random_graph_parity(spark):
-    """Deterministic pseudo-random graph: adaptive agrees with both
-    reference kernels even when label_rounds=1 forces escalation on a
-    partially-collapsed labelling."""
-    rows = [((i * 131 + 7) % 97, (i * 31 + 3) % 97) for i in range(120)]
-    edges = spark.createDataFrame(rows, "id_left long, id_right long")
-    expect = _components_dict(connected_components_star(edges))
-    assert _components_dict(connected_components_adaptive(edges)) == expect
-    assert (
-        _components_dict(connected_components_adaptive(edges, label_rounds=1))
-        == expect
+    """A second deterministic pseudo-random graph (97 ids, 120
+    edges)."""
+    _assert_matches_reference(
+        spark, [((i * 131 + 7) % 97, (i * 31 + 3) % 97) for i in range(120)]
     )
 
 
-def test_non_convergence_raises(spark):
-    """Exhausting max_iter before the fixpoint must raise — silent
-    partial propagation hands out wrong (split) component ids."""
+def test_non_convergence_raises(spark, monkeypatch):
+    """Exhausting the star round cap before the fixpoint must raise —
+    silent partial propagation hands out wrong (split) component ids.
+    The cap is lowered so a 12-edge chain, which one label round does
+    not finish, cannot converge."""
+    monkeypatch.setattr(cluster, "_STAR_MAX_ROUNDS", 1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_left long, id_right long"
     )
-    # pin the DISTRIBUTED kernel's contract — the driver union-find
-    # path (which cannot fail to converge) would otherwise absorb a
-    # graph this small
+    # pin the DISTRIBUTED path's contract — the driver union-find
+    # (which cannot fail to converge) would otherwise absorb a graph
+    # this small
     with pytest.raises(RuntimeError, match="did not converge"):
-        distributed(connected_components, edges, max_iter=2)
+        distributed(connected_components, edges, label_rounds=1)
 
 
 def test_driver_kernel_matches_distributed(spark, monkeypatch):
-    """The small-graph driver union-find must agree bit-for-bit with
-    every distributed kernel — on a long chain (worst case for
-    min-label), a pseudo-random multigraph (duplicate + reversed
-    edges), string node ids, and a graph with isolated self-loop
-    nodes. At the bound: a graph of exactly PPACK_DRIVER_MAX_EDGES
-    compared rows takes the driver path, one of bound+1 rows the
-    distributed path, with identical output; the bound is set after
-    import, so this also pins that it is read at call time. Each kernel
-    compares its own row count: symmetrized rows for label/adaptive
-    (10 for a 5-edge chain), oriented rows for star (5)."""
-    cases = [
-        spark.createDataFrame(
-            [(i, i + 1) for i in range(40)], "id_left long, id_right long"
-        ),
-        spark.createDataFrame(
-            [((i * 131 + 7) % 53, (i * 31 + 3) % 53) for i in range(150)],
-            "id_left long, id_right long",
-        ),
-        spark.createDataFrame(
-            [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "a:9"), ("b:7", "b:8")],
-            "id_left string, id_right string",
-        ),
-    ]
-    for df in cases:
-        driver = _components_dict(connected_components_star(df))
-        assert driver == _components_dict(
-            distributed(connected_components_star, df, max_iter=15)
-        )
-        assert driver == _components_dict(
-            distributed(connected_components, df, max_iter=200)
-        )
-        assert driver == _components_dict(
-            distributed(connected_components_adaptive, df)
-        )
-        # the label/adaptive kernels' driver paths agree too
-        assert driver == _components_dict(connected_components(df))
-        assert driver == _components_dict(connected_components_adaptive(df))
+    """String node ids agree with the reference on every path. Then
+    the two driver-or-distributed decisions at their bounds, on a
+    5-edge chain: the kernel's own (10 symmetrized rows) and the star
+    finisher's (4 oriented rows in the graph contracted by one label
+    round). A frame of exactly PPACK_DRIVER_MAX_EDGES rows takes the
+    driver path, one of bound+1 rows the distributed path, with
+    identical output; the bound is set after import, so this also pins
+    that it is read at call time."""
+    _assert_matches_reference(
+        spark,
+        [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "a:9"), ("b:7", "b:8")],
+        "id_left string, id_right string",
+    )
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_left long, id_right long"
     )
     want = {i: 0 for i in range(6)}
     paths = spy_driver_paths(monkeypatch, cluster)
-    for kernel, n_rows in (
-        (connected_components, 10),
-        (connected_components_adaptive, 10),
-        (connected_components_star, 5),
+    for bound, expect in (
+        (10, ["driver"]),
+        (9, ["distributed", "driver"]),
+        (4, ["distributed", "driver"]),
+        (3, ["distributed", "distributed"]),
     ):
-        for bound, path in ((n_rows, "driver"), (n_rows - 1, "distributed")):
-            monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", str(bound))
-            paths.clear()
-            assert _components_dict(kernel(edges)) == want, (kernel, bound)
-            # adaptive's escalation may add a star call on the
-            # contracted graph; the first decision is the kernel's own
-            assert paths[0] == path, (kernel, bound, paths)
+        monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", str(bound))
+        paths.clear()
+        got = _components_dict(connected_components(edges, label_rounds=1))
+        assert got == want, bound
+        assert paths == expect, (bound, paths)
 
 
 @pytest.mark.parametrize("raw", ["abc", "-1"])
@@ -298,14 +256,14 @@ def test_driver_bound_malformed_raises_at_call(spark, monkeypatch, raw):
     edges = spark.createDataFrame([(1, 2)], "id_left long, id_right long")
     monkeypatch.setenv("PPACK_DRIVER_MAX_EDGES", raw)
     with pytest.raises(ValueError, match="PPACK_DRIVER_MAX_EDGES"):
-        connected_components_adaptive(edges)
+        connected_components(edges)
 
 
 def test_collated_string_ids_take_distributed_path(spark, monkeypatch):
     """Under a non-binary collation Spark orders and compares ids
     differently from Python ("A" == "a", "a" < "B" under UTF8_LCASE),
     so the driver union-find would answer differently: such ids must
-    get the distributed kernels' answer. Node values that are equal
+    get the distributed path's answer. Node values that are equal
     under the collation may come back in either case, so outputs are
     compared lower-cased."""
     edges = spark.createDataFrame(
@@ -318,10 +276,10 @@ def test_collated_string_ids_take_distributed_path(spark, monkeypatch):
             {(r["node"].lower(), r["component"].lower()) for r in df.collect()}
         )
 
-    want = lowered(distributed(connected_components_adaptive, edges))
+    want = lowered(distributed(connected_components, edges))
     assert want == [("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")]
     paths = spy_driver_paths(monkeypatch, cluster)
-    assert lowered(connected_components_adaptive(edges)) == want
+    assert lowered(connected_components(edges)) == want
     assert set(paths) == {"distributed"}
 
 

@@ -238,7 +238,7 @@ def test_hamming_segment_pairs_canonical_segment_filter(spark):
 
 def test_near_dedup_corpus_keeps_canonical(spark):
     """Planted near-duplicate group collapses to its min-id member;
-    singletons survive; both component kernels agree."""
+    singletons survive."""
     from ppack_spark.operators.dedup import near_dedup_corpus
 
     base = "the common core of this document is long enough to shingle"
@@ -252,10 +252,6 @@ def test_near_dedup_corpus_keeps_canonical(spark):
     got = sorted(r["doc_id"] for r in near_dedup_corpus(df).collect())
     assert 4 in got and 1 in got
     assert 2 not in got and 3 not in got
-    star = sorted(
-        r["doc_id"] for r in near_dedup_corpus(df, use_star=True).collect()
-    )
-    assert star == got
 
 
 def test_line_dedup_hot_key_stress(spark):

@@ -240,7 +240,7 @@ def test_decode_image_batch_pil_branch(monkeypatch):
 
 def test_media_near_dedup_collapses_groups(spark):
     """Identical payloads collapse to the min-id asset per kind
-    block; distinct payloads survive; both component kernels agree."""
+    block; distinct payloads survive."""
     from pyspark.sql import functions as F
 
     from ppack_spark.operators.multimodal import (
@@ -262,13 +262,6 @@ def test_media_near_dedup_collapses_groups(spark):
         key = (r["kind"], r["h"])
         mins[key] = min(mins.get(key, r["doc_id"]), r["doc_id"])
     assert kept_ids == sorted(mins.values())
-    star = sorted(
-        r["doc_id"]
-        for r in media_near_dedup(media, use_star=True)
-        .select("doc_id")
-        .collect()
-    )
-    assert star == kept_ids
 
 
 def _encode_ppm(gray_rgb) -> bytes:

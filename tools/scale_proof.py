@@ -107,8 +107,9 @@ QUERIES = [
     # round-8: the 100 TB Hamming config (64-bit fp, 16-bit segments,
     # capped) — the r7 verdict's item 3; runs to sf1
     "simhash_near_dup_wide64",
-    # round-8 adaptive cluster kernel (escalation path forced at gate
-    # scale via label_rounds=1)
+    # the components kernel with label_rounds=1: past the driver bound,
+    # a graph one label round does not finish takes the
+    # contract-then-star path; below it, the driver union-find
     "dedup_clusters_adaptive",
     "bloom_decontamination",
     "eval_decontamination",
