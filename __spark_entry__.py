@@ -54,14 +54,10 @@ def entry(spark: SparkSession) -> DataFrame:
         ],
         comparisons=[
             pp.Comparison.exact("c_mktsegment"),
-            # Comparison.jw is the flagship CORRECTNESS default (round
-            # 9, per ADVICE): jw_approx's Levenshtein floor is an
-            # unsound bound — transposition-dense pairs with true
-            # JW > 0.85 could silently land on the default bucket
-            # under a corpus shift. jw_approx stays the documented
-            # opt-in for the 26M-pair hot path, where jw_prefilter's
-            # loss is measured per-corpus (it is zero on both test
-            # corpora); the flagship prefers the exact tier.
+            # Comparison.jw is the exact tier. jw_approx's Levenshtein
+            # floor is not a sound bound: transposition-dense pairs
+            # with true JW > 0.85 can land on the default bucket, so
+            # the flagship does not use it.
             pp.Comparison.jw("c_name"),
             pp.Comparison.buckets(
                 "acctbal",

@@ -41,7 +41,7 @@ from .operators.cluster import (
     connected_components,
 )
 from .operators.rangejoin import range_join_bucketed
-from .pairs import compute_pairs_dataset, sample_pair_ids, sample_pair_ids_inplan
+from .pairs import compute_pairs_dataset, sample_pair_ids_inplan
 from .patterns import (
     collect_probabilities,
     do_comparisons,
@@ -92,7 +92,6 @@ __all__ = [
     "posterior_probability",
     "range_join_bucketed",
     "run_em",
-    "sample_pair_ids",
     "sample_pair_ids_inplan",
     "score_pairs",
     "suffixed",

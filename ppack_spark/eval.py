@@ -80,34 +80,37 @@ def _best_from_counts(counts: DataFrame, round_digits: int) -> DataFrame:
     )
 
 
-def _sweep_from_counts(
-    counts: DataFrame,
-    ts: "list[float]",
-    round_digits: int,
-    inclusive: bool,
-) -> DataFrame:
-    """The threshold sweep computed FROM the per-weight counts table:
-    bucket each distinct weight by the largest threshold it passes,
-    sum the pre-aggregated counts per bucket, then the same cumulative
-    axis as :func:`threshold_sweep_metrics`. Everything here runs on
-    count-table-sized frames."""
-    from pyspark.sql.window import Window
-
-    w = F.col("__w")
+def _threshold_bucket(w, ts: "list[float]", inclusive: bool):
+    """The LARGEST threshold in ascending ``ts`` that weight ``w``
+    passes, NULL below every threshold — one CASE-WHEN projection."""
     passes = (lambda tau: w >= F.lit(tau)) if inclusive else (lambda tau: w > F.lit(tau))
     bucket = F.when(passes(ts[-1]), F.lit(ts[-1]))
     for tau in reversed(ts[:-1]):
         bucket = bucket.when(passes(tau), F.lit(tau))
-    agg = counts.groupBy(bucket.alias("__b")).agg(
-        F.sum("__n").alias("__n"),
-        F.coalesce(F.sum("__t"), F.lit(0.0)).alias("__t"),
-    )
-    # two consumers (grand-truth total + threshold-axis join) through
-    # different exchange shapes — same re-execution trap and same lazy-
-    # checkpoint fix as threshold_sweep_metrics (the 62 s → 2 s lesson)
+    return bucket
+
+
+def _sweep_from_buckets(
+    agg: DataFrame, ts: "list[float]", round_digits: int
+) -> DataFrame:
+    """Per-threshold P/R/F1 from the ``(__b, __n, __t)`` bucket table
+    (pair and true-pair counts per largest-passed threshold): the
+    cumulative sums over the descending threshold axis, against the
+    grand truth total that includes the below-every-τ bucket.
+    Everything here runs on ≤ k+1-row frames."""
+    from pyspark.sql.window import Window
+
+    # Two consumers read `agg` (the grand-truth total and the
+    # threshold-axis join) through DIFFERENT exchange shapes, so
+    # Spark's exchange reuse does not kick in and each would re-run
+    # the bucket aggregation — i.e. re-execute the caller's whole
+    # upstream chain (measured 62 s vs 2 s on the FS gate at sf0.1).
+    # A lazy local checkpoint of the bucket table makes the upstream
+    # scan happen exactly once — same pattern, same reasoning as
+    # key_skew_report's counts table (blocking.py).
     agg = agg.localCheckpoint(eager=False)
     total = agg.agg(F.sum("__t").alias("__total_true"))
-    spark = counts.sparkSession
+    spark = agg.sparkSession
     tdf = spark.createDataFrame([(t,) for t in ts], "threshold double")
     joined = tdf.join(agg, tdf["threshold"] == agg["__b"], "left").select(
         "threshold",
@@ -140,6 +143,24 @@ def _sweep_from_counts(
         F.round(recall, round_digits).alias("recall"),
         F.round(f1, round_digits).alias("f1"),
     )
+
+
+def _sweep_from_counts(
+    counts: DataFrame,
+    ts: "list[float]",
+    round_digits: int,
+    inclusive: bool,
+) -> DataFrame:
+    """The threshold sweep computed FROM the per-weight counts table:
+    bucket each distinct weight by the largest threshold it passes and
+    sum the pre-aggregated counts per bucket, then the same cumulative
+    axis as :func:`threshold_sweep_metrics`."""
+    bucket = _threshold_bucket(F.col("__w"), ts, inclusive)
+    agg = counts.groupBy(bucket.alias("__b")).agg(
+        F.sum("__n").alias("__n"),
+        F.coalesce(F.sum("__t"), F.lit(0.0)).alias("__t"),
+    )
+    return _sweep_from_buckets(agg, ts, round_digits)
 
 
 def evaluation_report(
@@ -259,63 +280,15 @@ def threshold_sweep_metrics(
     no true pairs). Thresholds are deduplicated and each appears in
     the output even when no pair lands in its bucket.
     """
-    from pyspark.sql.window import Window
-
     ts = sorted({float(x) for x in thresholds})
     if not ts:
         raise ValueError("threshold_sweep_metrics needs at least one threshold")
-    w = F.col(weight_col)
-    passes = (lambda tau: w >= F.lit(tau)) if inclusive else (lambda tau: w > F.lit(tau))
-    bucket = F.when(passes(ts[-1]), F.lit(ts[-1]))
-    for tau in reversed(ts[:-1]):
-        bucket = bucket.when(passes(tau), F.lit(tau))
+    bucket = _threshold_bucket(F.col(weight_col), ts, inclusive)
     agg = labelled.groupBy(bucket.alias("__b")).agg(
         F.count(F.lit(1)).alias("__n"),
         F.coalesce(F.sum(F.col(truth_col).cast("double")), F.lit(0.0)).alias("__t"),
     )
-    # Two consumers read `agg` (the grand-truth total and the
-    # threshold-axis join) through DIFFERENT exchange shapes, so
-    # Spark's exchange reuse does not kick in and each would re-run
-    # the pair-table aggregation — i.e. re-execute the caller's whole
-    # upstream chain (measured 62 s vs 2 s on the FS gate at sf0.1).
-    # A lazy local checkpoint of the ≤ k+1-row bucket table makes the
-    # pair scan happen exactly once — same pattern, same reasoning as
-    # key_skew_report's counts table (blocking.py).
-    agg = agg.localCheckpoint(eager=False)
-    total = agg.agg(F.sum("__t").alias("__total_true"))
-    spark = labelled.sparkSession
-    tdf = spark.createDataFrame([(t,) for t in ts], "threshold double")
-    joined = tdf.join(agg, tdf["threshold"] == agg["__b"], "left").select(
-        "threshold",
-        F.coalesce(F.col("__n"), F.lit(0)).alias("__n"),
-        F.coalesce(F.col("__t"), F.lit(0.0)).alias("__t"),
-    )
-    win = Window.orderBy(F.desc("threshold")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = joined.select(
-        "threshold",
-        F.sum("__n").over(win).alias("n_pred"),
-        F.sum("__t").over(win).alias("n_true_pos"),
-    ).crossJoin(F.broadcast(total))
-    precision = F.when(
-        F.col("n_pred") > 0, F.col("n_true_pos") / F.col("n_pred")
-    )
-    recall = F.when(
-        F.col("__total_true") > 0, F.col("n_true_pos") / F.col("__total_true")
-    )
-    f1 = F.when(
-        precision.isNotNull() & recall.isNotNull() & (precision + recall > 0),
-        2 * precision * recall / (precision + recall),
-    )
-    return cum.select(
-        "threshold",
-        F.col("n_pred").cast("long").alias("n_pred"),
-        F.col("n_true_pos").cast("double").alias("n_true_pos"),
-        F.round(precision, round_digits).alias("precision"),
-        F.round(recall, round_digits).alias("recall"),
-        F.round(f1, round_digits).alias("f1"),
-    )
+    return _sweep_from_buckets(agg, ts, round_digits)
 
 
 def best_threshold_by_f1(

@@ -14,13 +14,12 @@ reuses the pairs' partitioning where possible.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .exprs import suffixed, with_suffix
 
-__all__ = ["compute_pairs_dataset", "sample_pair_ids", "sample_pair_ids_inplan"]
+__all__ = ["compute_pairs_dataset", "sample_pair_ids_inplan"]
 
 
 def compute_pairs_dataset(
@@ -43,34 +42,6 @@ def compute_pairs_dataset(
     return comparison_ids.join(a, on=id_l, how="left").join(b, on=id_r, how="left")
 
 
-def sample_pair_ids(
-    spark: SparkSession,
-    ids_a: list,
-    ids_b: list | None = None,
-    size: int = 1_000_000,
-    seed: int = 42,
-    id_left: str = "unique_id_left",
-    id_right: str = "unique_id_right",
-) -> DataFrame:
-    """Uniform random id pairs **with replacement** (reference
-    scratch.R:68-69 samples driver-side then ``copy_to``s). Seeded
-    numpy RNG → exact, reproducible — preferred over ``df.sample``
-    which is per-row Bernoulli and cannot produce "exactly N pairs".
-
-    For cluster scale prefer :func:`sample_pair_ids_inplan`, which
-    never moves ids through the driver.
-    """
-    rng = np.random.default_rng(seed)
-    ids_a_arr = np.asarray(ids_a)
-    ids_b_arr = ids_a_arr if ids_b is None else np.asarray(ids_b)
-    left = ids_a_arr[rng.integers(0, len(ids_a_arr), size=size)]
-    right = ids_b_arr[rng.integers(0, len(ids_b_arr), size=size)]
-    import pandas as pd
-
-    pdf = pd.DataFrame({id_left: left, id_right: right})
-    return spark.createDataFrame(pdf)
-
-
 def sample_pair_ids_inplan(
     spark: SparkSession,
     n_a: int,
@@ -80,9 +51,11 @@ def sample_pair_ids_inplan(
     id_left: str = "unique_id_left",
     id_right: str = "unique_id_right",
 ) -> DataFrame:
-    """Distributed variant for contiguous 0-based ids: generate the
-    sample in-plan with ``F.rand(seed)`` over ``spark.range`` — no
-    driver materialization, scales to any ``size``."""
+    """Uniform random id pairs **with replacement** for contiguous
+    0-based ids (the reference samples driver-side then ``copy_to``s,
+    scratch.R:68-69): generated in-plan with ``F.rand(seed)`` over
+    ``spark.range``, so no id moves through the driver and ``size``
+    is exact at any scale."""
     n_b = n_b if n_b is not None else n_a
     return (
         spark.range(size)

@@ -17,6 +17,16 @@ path keeps the JW column from dominating the comparison stage. It is
 not the hot spot: the kernel sustains ~375k pairs/s/core on 18-byte
 names at 10k-row Arrow batches.
 
+Two comparator tiers sit on that UDF. :func:`jw_comparator` is the
+exact one and ``Comparison.jw``'s backend. :func:`jw_approx_comparator`
+puts a JVM length/prefix bound and an approximate Levenshtein floor in
+front of the same UDF; its buckets can differ from the exact tier's
+(see :func:`jw_prefilter`), so it is an explicit caller choice, never
+an automatic one. It pays only on large pair sets that the prefilter
+thins: at sf0.1 on a 4-core VM it ran the 8M brand-blocked part-name
+pairs 7-12 % faster in the median, tied on a 15k-pair customer sample
+and was 15-23 % slower on 200k truncated-name customer pairs.
+
 UDF placement policy (SURVEY §7 risk register): similarity UDFs run
 strictly *post-blocking* over the candidate pairs — never inside a
 join predicate, where they would break whole-stage codegen and force a
@@ -38,8 +48,6 @@ __all__ = [
     "jaro_winkler_py",
     "jw_similarity",
     "jw_comparator",
-    "jw_sql_similarity",
-    "jw_sql_comparator",
     "levenshtein_similarity",
 ]
 
@@ -198,10 +206,10 @@ def _numpy_jw_kernel(L, R, len1, len2) -> np.ndarray:
 
 
 def _numpy_jw_batch(sub_l: list, sub_r: list) -> list:
-    """Vectorized batch JW (bytes pairs → list[float]) — the
-    always-available fast path when no exact C library is installed.
-    Pairs are bucketed by max byte length (≤8/16/32/64) to bound
-    padding waste; longer pairs fall back to the pure-Python loop."""
+    """Vectorized batch JW (bytes pairs → list[float]), the fast path
+    behind :func:`_jw_batch`. Pairs are bucketed by max byte length
+    (≤8/16/32/64) to bound padding waste; longer pairs fall back to the
+    pure-Python loop."""
     n = len(sub_l)
     if n == 0:
         return []
@@ -311,176 +319,13 @@ def jaro_winkler(left: Column | str, right: Column | str) -> Column:
     return jw_similarity(l, r)
 
 
-def jw_sql_similarity(left: Column | str, right: Column | str) -> Column:
-    """Jaro-Winkler as a PURE Catalyst expression — zero Python in the
-    plan — via higher-order functions over the UTF-8 bytes.
-
-    Bit-exact with :func:`jaro_winkler_py` (same greedy byte matching,
-    transposition floor-halving, 0.7 boost threshold, 4-byte prefix
-    cap, empty→0.0, NULL-propagating — pinned by
-    tests/test_similarity.py over unicode/empty/equal edges and random
-    pairs), hence DuckDB-compatible to the same 6 dp the oracle gates
-    check.
-
-    Shape: one ``aggregate`` over ``sequence(1, len(l))`` whose
-    accumulator carries the matched positions of both sides
-    (``m1``/``m2`` int arrays — NOT a boolean flags array, which would
-    cost an O(len) copy per step); each step scans only the Jaro
-    window with ``filter`` and binds the first unmatched hit ONCE
-    through a single-element ``transform`` (Catalyst does not CSE
-    inside lambda bodies — referencing the filter from two struct
-    fields re-runs the whole window scan). Transpositions come from
-    zipping ``m1``'s chars against ``array_sort(m2)``'s.
-
-    When to use which tier (bench-measured on the jw_*_buckets gates,
-    identical 15k-pair sample at sf0.1): the Arrow kernel
-    (:func:`jw_similarity`) is ~10× faster per CORE on 18-byte names
-    (~37 µs vs ~360 µs per pair — interpreted HOF lambda dispatch
-    dominates) and stays the default for throughput. This tier wins
-    operationally when Python workers are the constraint — no Arrow
-    hop, no Python worker memory, no PYSPARK_PYTHON on executors —
-    and it is the only tier legal inside join conditions or streaming
-    state predicates, since it is a plain expression rather than an
-    extracted ArrowEvalPython node (the UDF-placement policy in the
-    module docstring does not apply to it). Two placement rules when
-    consuming it: bind the result once (single-element ``transform``
-    let, or ``inline`` when fanning into several columns — Catalyst
-    re-evaluates multi-referenced non-cheap expressions), and
-    ``spread()`` compute-bound pair sets first (AQE coalesces small
-    shuffles by BYTES; this expression is bound by CPU).
-    """
-    l = F.col(left) if isinstance(left, str) else left
-    r = F.col(right) if isinstance(right, str) else right
-    # DuckDB (and jaro_winkler_py) score UTF-8 BYTES, not codepoints;
-    # substring()/length()/equality all operate bytewise on BinaryType
-    b1 = F.encode(l, "UTF-8")
-    b2 = F.encode(r, "UTF-8")
-    n1 = F.length(b1)
-    n2 = F.length(b2)
-    w = F.greatest((F.greatest(n1, n2) / 2).cast("int") - F.lit(1), F.lit(0))
-
-    def merge(acc, i):
-        c = F.substring(b1, i, 1)
-        lo = F.greatest(F.lit(1), i - w)
-        hi = F.least(n2, i + w)
-        # sequence(lo, hi) with lo > hi generates a DESCENDING range —
-        # guard the empty-window case explicitly
-        cand = F.when(
-            lo <= hi,
-            F.filter(
-                F.sequence(lo, hi),
-                lambda j: (F.substring(b2, j, 1) == c)
-                & ~F.array_contains(acc["m2"], j),
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-        j0 = F.element_at(cand, 1)
-        return F.element_at(
-            F.transform(
-                F.array(j0),
-                lambda j: F.struct(
-                    F.when(j.isNotNull(), F.concat(acc["m1"], F.array(i)))
-                    .otherwise(acc["m1"])
-                    .alias("m1"),
-                    F.when(j.isNotNull(), F.concat(acc["m2"], F.array(j)))
-                    .otherwise(acc["m2"])
-                    .alias("m2"),
-                ),
-            ),
-            1,
-        )
-
-    def finish(acc):
-        m = F.size(acc["m1"])
-        m1c = F.transform(acc["m1"], lambda i: F.substring(b1, i, 1))
-        # greedy match js are NOT increasing in i (transposed pairs);
-        # s2's matched chars in s2 order = chars at sorted positions
-        m2c = F.transform(F.array_sort(acc["m2"]), lambda j: F.substring(b2, j, 1))
-        mis = F.size(
-            F.filter(
-                F.sequence(F.lit(1), m),
-                lambda k: F.element_at(m1c, k) != F.element_at(m2c, k),
-            )
-        )
-        t = F.floor(mis / 2).cast("double")
-        md = m.cast("double")
-        jaro = (
-            md / n1.cast("double") + md / n2.cast("double") + (md - t) / md
-        ) / F.lit(3.0)
-        pl = (
-            F.when(F.substring(b1, 1, 4) == F.substring(b2, 1, 4), 4)
-            .when(F.substring(b1, 1, 3) == F.substring(b2, 1, 3), 3)
-            .when(F.substring(b1, 1, 2) == F.substring(b2, 1, 2), 2)
-            .when(F.substring(b1, 1, 1) == F.substring(b2, 1, 1), 1)
-            .otherwise(0)
-        ).cast("double")
-        boosted = jaro + pl * F.lit(0.1) * (F.lit(1.0) - jaro)
-        return F.when(m == 0, F.lit(0.0)).otherwise(
-            F.when(jaro > 0.7, boosted).otherwise(jaro)
-        )
-
-    agg = F.aggregate(
-        F.sequence(F.lit(1), n1),
-        F.struct(
-            F.array().cast("array<int>").alias("m1"),
-            F.array().cast("array<int>").alias("m2"),
-        ),
-        merge,
-        finish,
-    )
-    return (
-        F.when(l.isNull() | r.isNull(), F.lit(None).cast("double"))
-        .when((n1 == 0) | (n2 == 0), F.lit(0.0))
-        .when(b1 == b2, F.lit(1.0))
-        .otherwise(agg)
-    )
-
-
-def jw_sql_comparator(
-    var: str,
-    left: Column | str | None = None,
-    right: Column | str | None = None,
-) -> Column:
-    """:func:`jw_comparator` buckets over :func:`jw_sql_similarity` —
-    the zero-Python tier of the reference's signature comparator
-    (comparators.R:4-14). Bucket-identical to the UDF tier on every
-    input (both kernels are bit-exact with jaro_winkler_py), with the
-    similarity computed as a plain Catalyst expression, so the whole
-    comparison stage runs without Python workers.
-
-    The similarity is bound ONCE through a single-element ``transform``
-    before the bucket CASE: the UDF tier leans on Spark deduplicating
-    equal ArrowEvalPython calls, but an expression referenced from
-    three CASE branches would re-run the aggregate per branch (HOFs
-    are codegen-fallback, outside subexpression elimination)."""
-    from .exprs import suffixed
-    from .spec import JW_LEVELS
-
-    l = F.col(suffixed(var, "_left")) if left is None else (
-        F.col(left) if isinstance(left, str) else left
-    )
-    r = F.col(suffixed(var, "_right")) if right is None else (
-        F.col(right) if isinstance(right, str) else right
-    )
-    full, strong, weak, none = JW_LEVELS
-    return F.element_at(
-        F.transform(
-            F.array(jw_sql_similarity(l, r)),
-            lambda s: F.when(s == 1.0, full)
-            .when(s > 0.9, strong)
-            .when(s > 0.85, weak)
-            .otherwise(none),
-        ),
-        1,
-    )
-
-
 def jw_comparator(
     var: str,
     left: Column | str | None = None,
     right: Column | str | None = None,
 ) -> Column:
-    """``build_jw_comparator_expressions`` (reference comparators.R:4-14):
-    Jaro-Winkler similarity bucketed first-match-wins at
+    """``build_jw_comparator_expressions`` (reference comparators.R:4-14),
+    the exact JW tier: Jaro-Winkler similarity bucketed first-match-wins at
     ``== 1`` / ``> 0.9`` / ``> 0.85`` / else into the four JW_LEVELS.
 
     A NULL input yields NULL similarity, which fails every condition
@@ -562,15 +407,15 @@ def jw_approx_comparator(
     lev_floor: float = 0.4,
 ) -> Column:
     """:func:`jw_comparator` with the Python kernel behind a JVM
-    prefilter — the scale tier for the 26M-pair budget, where the
-    serialize→score→deserialize Arrow hop is the chain's dominant
-    avoidable cost (SURVEY §4).
+    prefilter — the tier for large pair sets that the prefilter thins
+    (measured gain and loss in the module docstring).
 
     A Python UDF inside a CASE branch does NOT evaluate lazily —
     Spark extracts it into an unconditional ArrowEvalPython node — so
     the filtering is done on the UDF's INPUTS: pairs failing
     :func:`jw_prefilter` ship (NULL, NULL) through Arrow (validity
-    bits only, and the batch kernel skips non-strings in C) and land
+    bits only, and the batch scorer skips non-strings before the
+    kernel) and land
     on the default bucket. Equal non-empty pairs take ``full`` without
     touching Python at all; the ``== 1.0`` bucket needs no kernel
     because JW = 1 iff the strings are identical.

@@ -104,11 +104,12 @@ class Comparison:
         """:meth:`jw` behind a JVM prefilter (similarity.jw_prefilter):
         equal pairs bucket without Python, pairs that provably or
         probably cannot reach the 0.85 bucket ship NULLs through
-        Arrow, only contenders reach the C kernel — the scale tier
-        when the pair budget makes the Arrow hop the dominant cost.
-        Bucket-identical to :meth:`jw` except for pairs skipped by the
-        approximate Levenshtein floor (empty at the default floor on
-        both test corpora — see jw_prefilter)."""
+        Arrow, only contenders reach the numpy kernel — an explicit
+        choice for large pair sets that the prefilter thins (measured
+        in the similarity module docstring). Bucket-identical to
+        :meth:`jw` except for pairs skipped by the approximate
+        Levenshtein floor (empty at the default floor on both test
+        corpora — see jw_prefilter)."""
         from .similarity import jw_approx_comparator
 
         return Comparison(
@@ -118,31 +119,12 @@ class Comparison:
         )
 
     @staticmethod
-    def jw_sql(
-        var: str, left: str | None = None, right: str | None = None
-    ) -> "Comparison":
-        """:meth:`jw` with the similarity computed as a pure Catalyst
-        expression (similarity.jw_sql_similarity) — bucket-identical
-        to the UDF tier (both kernels are bit-exact with
-        jaro_winkler_py) with ZERO Python in the plan: no Arrow hop,
-        no Python workers on executors, and legal inside join
-        conditions where an extracted ArrowEvalPython node is not.
-        ~10× slower per core than the Arrow kernel on short names
-        (bench-measured on the twin gates); choose it when
-        Python-worker cost or placement beats per-pair throughput."""
-        from .similarity import jw_sql_comparator
-
-        return Comparison(
-            name=var,
-            expression=jw_sql_comparator(var, left, right),
-            levels=tuple(JW_LEVELS),
-        )
-
-    @staticmethod
     def levenshtein(var: str, left: str | None = None, right: str | None = None) -> "Comparison":
-        """JW-bucket thresholds over normalized Levenshtein similarity —
-        the JVM-builtin (codegen) fuzzy comparator, preferred at scale
-        over the JW pandas UDF when bucket semantics suffice."""
+        """JW-bucket thresholds over normalized Levenshtein similarity
+        (similarity.levenshtein_similarity): the Spark builtin edit
+        distance, JVM-side and codegen, with no Python in the plan.
+        Its buckets are not JW's; use :meth:`jw` for the reference's
+        comparator."""
         from pyspark.sql import functions as F
 
         from .exprs import bucket_comparator, suffixed

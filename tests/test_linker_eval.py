@@ -179,41 +179,6 @@ def test_posterior_probability_bounds_and_monotonicity(labelled):
     assert ordered["match_probability"].is_monotonic_increasing
 
 
-def test_jw_sql_comparison_end_to_end(spark, tables):
-    """Comparison.jw_sql (the zero-Python tier) drives the identical
-    estimate+score path and lands on the same scored weights as
-    Comparison.jw — the two tiers are interchangeable inside a
-    LinkerSpec, and the jw_sql chain's executed plan contains no
-    Python node anywhere (blocking, comparison, scoring included)."""
-    customer = tables["customer"]
-
-    def spec_with(comp):
-        return pp.LinkerSpec(
-            unique_id_left="c_custkey",
-            unique_id_right="c_custkey",
-            blocking_rules=[pp.BlockingRule.on("c_nationkey")],
-            comparisons=[comp("c_name"), pp.Comparison.exact("c_mktsegment")],
-        )
-
-    scored = {}
-    for name, comp in [("udf", pp.Comparison.jw), ("sql", pp.Comparison.jw_sql)]:
-        linker = pp.Linker(spark, customer, None, spec_with(comp))
-        linker.estimate(maxiter=3, u_sample_size=1000)
-        scored[name] = linker.score()
-    plan = (
-        scored["sql"]._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    rows = {
-        name: {
-            (r["c_custkey_left"], r["c_custkey_right"]): round(r["weight"], 9)
-            for r in df.collect()
-        }
-        for name, df in scored.items()
-    }
-    assert rows["udf"] == rows["sql"]
-
-
 def test_threshold_sweep_metrics_hand_computed(spark):
     """Six pairs with known weights/truth: per-threshold n_pred /
     n_true_pos / precision / recall / F1 match hand computation;

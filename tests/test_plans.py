@@ -352,7 +352,7 @@ def test_registry_wide_plan_invariants(spark, tables, queries):
     only for those tiny builds)."""
     allowed_pandas_udf = {
         # JW similarity: Arrow-batched, post-blocking by construction
-        "jw_comparator_buckets", "comparison_vectors",
+        "jw_comparator_buckets", "jw_sql_buckets", "comparison_vectors",
         "match_weight_scoring", "threshold_rank", "threshold_topk",
         "posterior_probability", "calibration_curve", "calibration_glm",
         "linkage_em_params", "linkage_em_end_to_end", "pattern_counts",

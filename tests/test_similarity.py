@@ -275,79 +275,3 @@ def test_jw_approx_plan_gates_udf_inputs(spark):
         line for line in plan.splitlines() if "ArrowEvalPython" in line
     )
     assert "CASE WHEN" in arrow_line, arrow_line
-
-
-def test_jw_sql_matches_pure_python(spark):
-    """The pure-Catalyst tier (jw_sql_similarity) is bit-exact with
-    jaro_winkler_py over the WORDS cross (which itself is pinned to
-    DuckDB above) plus NULL / empty / equal / multi-byte edges."""
-    from ppack_spark.similarity import jw_sql_similarity
-
-    cases = [(a, b) for a in WORDS for b in WORDS]
-    cases += [(None, "x"), ("x", None), (None, None), ("", ""), ("", "a")]
-    df = spark.createDataFrame(cases, "l string, r string")
-    rows = df.select("l", "r", jw_sql_similarity("l", "r").alias("jw")).collect()
-    for row in rows:
-        want = jaro_winkler_py(row["l"], row["r"])
-        if want is None:
-            assert row["jw"] is None, (row["l"], row["r"])
-        else:
-            assert row["jw"] == pytest.approx(want, abs=1e-12), (
-                row["l"], row["r"],
-            )
-
-
-def test_jw_sql_random_parity(spark):
-    """Randomized parity sweep including transposition-dense strings
-    and multi-byte UTF-8 (byte semantics, not codepoints)."""
-    import random
-
-    from ppack_spark.similarity import jw_sql_similarity
-
-    rng = random.Random(20260815)
-    alpha = "abcdefg éü#0"
-    cases = []
-    for _ in range(400):
-        a = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 14)))
-        b = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 14)))
-        cases.append((a, b))
-    df = spark.createDataFrame(cases, "l string, r string")
-    rows = df.select("l", "r", jw_sql_similarity("l", "r").alias("jw")).collect()
-    for row in rows:
-        want = jaro_winkler_py(row["l"], row["r"])
-        assert row["jw"] == pytest.approx(want, abs=1e-12), (row["l"], row["r"])
-
-
-def test_jw_sql_plan_has_no_python(spark):
-    """The whole point of the tier: NO Python node anywhere in the
-    executed plan — the comparator is a plain Catalyst expression."""
-    from ppack_spark.similarity import jw_sql_comparator
-
-    df = spark.createDataFrame([("martha", "marhta")], "l string, r string")
-    plan = (
-        df.select(jw_sql_comparator("x", "l", "r").alias("g"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_jw_sql_comparator_buckets_match_udf_tier(spark):
-    """Bucket-identical to Comparison.jw on shared inputs, including
-    the NULL → default-bucket CASE semantics."""
-    from ppack_spark.similarity import jw_comparator, jw_sql_comparator
-
-    rows = [
-        ("martha", "marhta"), ("dwayne", "duane"), ("same", "same"),
-        ("", ""), (None, "x"), ("x", None), ("abcde", "edcba"),
-        ("Customer#000000001", "Customer#000000010"),
-    ]
-    df = spark.createDataFrame(rows, "l string, r string")
-    got = df.select(
-        jw_comparator("x", "l", "r").alias("udf"),
-        jw_sql_comparator("x", "l", "r").alias("sql"),
-    ).collect()
-    for row, pair in zip(got, rows):
-        assert row["udf"] == row["sql"], pair

@@ -61,7 +61,7 @@ QUERIES = [
     "match_weight_scoring_scaled",
     "blocking_estimate_scaled",
     "jw_scaled_buckets",
-    "jw_sql_buckets",
+    "jw_sql_buckets",          # same gate as jw_comparator_buckets
     # round-9: the A-B linkage path (customer x supplier) — the only
     # headline chains with no SCALE rows before r9 (verdict item 5).
     # The nation/region-blocked originals are quadratic-by-contract
