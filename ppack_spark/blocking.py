@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .exprs import as_column, suffixed, with_suffix
+from .operators.util import distributed_rank
 from .spec import BlockingRule
 
 __all__ = [
@@ -245,15 +246,11 @@ def sorted_neighborhood_pairs(
 
     * **Global rank without a one-task sort.** A bare
       ``row_number() OVER (ORDER BY key)`` funnels the entire dataset
-      through ONE task. Instead: range-repartition on
-      ``(key, id)`` (Spark's distributed sort partitioning — contiguous
-      key ranges per partition), local ``row_number`` within each
-      partition, plus a partition-offset computed from a
-      #partitions-row count table (the same minted-rank pattern as
-      ``Linker._synthetic_ids``). The resulting global rank is
-      INDEPENDENT of the sampled range boundaries because partitions
-      are contiguous and the within-partition order is total — ties in
-      the key break on the id, so the rank (and every pair) is
+      through ONE task. Instead the rank comes from
+      :func:`~ppack_spark.operators.util.distributed_rank` over
+      ``(key NULLS FIRST, id)``: range buckets, a local ``row_number``
+      per bucket and in-plan bucket offsets. Ties in the key break on
+      the id, so the order is total and the rank (and every pair) is
       deterministic across layouts and engines.
     * **Neighbor join without a non-equi join.** ``0 < rank_r − rank_l
       < window`` is a band predicate; joined directly it is a nested
@@ -275,34 +272,12 @@ def sorted_neighborhood_pairs(
         raise ValueError(f"window must be >= 2, got {window}")
     key = as_column(sort_key)
     keyed = data.select(F.col(unique_id).alias("__id"), key.alias("__k"))
-    part = keyed.repartitionByRange(F.col("__k"), F.col("__id"))
-    from pyspark.sql import Window
-
     # NULLS FIRST pinned explicitly (Spark's default, but DuckDB's
     # ORDER BY defaults to NULLS LAST — an oracle replay must say
     # NULLS FIRST or ranks diverge on NULL keys)
-    lw = Window.partitionBy("__p").orderBy(F.asc_nulls_first("__k"), "__id")
-    local = part.withColumn("__p", F.spark_partition_id()).withColumn(
-        "__local", F.row_number().over(lw) - 1
-    )
-    # pin the partition assignment: __p feeds both the offset-count job
-    # and the rank join and must agree between the two (eager local
-    # checkpoint, released by the ContextCleaner when unreferenced)
-    local = local.localCheckpoint(eager=True)
-    counts = {
-        r["__p"]: r["n"]
-        for r in local.groupBy("__p").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = [], 0
-    for p in sorted(counts):
-        offsets.append((p, acc))
-        acc += counts[p]
-    off = data.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__p int, __offset long"
-    )
-    ranked = local.join(F.broadcast(off), on="__p").select(
-        "__id", (F.col("__local") + F.col("__offset")).alias("__r")
-    )
+    ranked = distributed_rank(
+        keyed, [F.asc_nulls_first("__k"), F.col("__id")], "__r"
+    ).select("__id", "__r")
     left = ranked.select(
         F.col("__id").alias("__id_l"),
         F.col("__r").alias("__rl"),

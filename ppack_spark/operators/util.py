@@ -222,7 +222,13 @@ def distributed_rank(df, order_cols, out_col: str = "rank"):
 
     Cost: one range shuffle + one hash shuffle (the pid-partitioned
     local window) + a broadcast of the offset table — vs the
-    single-task global sort it replaces.
+    single-task global sort it replaces. No eager checkpoint and no
+    collect: the offsets stay in-plan.
+
+    The package's only rank/offset mechanism. Callers: the graph
+    rankings (``operators/graph.py``), sorted-neighborhood blocking's
+    global rank (``blocking.sorted_neighborhood_pairs``) and the
+    u-sample's synthetic ids (``Linker._synthetic_ids``).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F

@@ -53,14 +53,17 @@ def sample_pair_ids_inplan(
 ) -> DataFrame:
     """Uniform random id pairs **with replacement** for contiguous
     0-based ids (the reference samples driver-side then ``copy_to``s,
-    scratch.R:68-69): generated in-plan with ``F.rand(seed)`` over
-    ``spark.range``, so no id moves through the driver and ``size``
-    is exact at any scale."""
+    scratch.R:68-69): row ``i`` of ``spark.range(size)`` draws
+    ``pmod(xxhash64(seed, i), n_a)`` on the left and the same under
+    ``seed + 1`` on the right. Each index is a pure function of
+    (seed, row id), so the sample is the same at any partition count
+    or core count; no id moves through the driver and ``size`` is
+    exact at any scale."""
     n_b = n_b if n_b is not None else n_a
-    return (
-        spark.range(size)
-        .select(
-            F.floor(F.rand(seed) * n_a).cast("long").alias(id_left),
-            F.floor(F.rand(seed + 1) * n_b).cast("long").alias(id_right),
-        )
+
+    def draw(s: int, n: int):
+        return F.pmod(F.xxhash64(F.lit(s), F.col("id")), F.lit(n))
+
+    return spark.range(size).select(
+        draw(seed, n_a).alias(id_left), draw(seed + 1, n_b).alias(id_right)
     )

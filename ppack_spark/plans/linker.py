@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..blocking import extract_blocks, ordered_pairs
 from ..em import FSParams, run_em
+from ..operators.util import distributed_rank
 from ..pairs import compute_pairs_dataset, sample_pair_ids_inplan
 from ..patterns import (
     collect_probabilities,
@@ -89,43 +90,12 @@ class Linker:
         (scratch.R:63-69) so uniform index sampling works for ANY id
         domain (1-based, non-contiguous, strings).
 
-        The sample only needs a bijection ids → [0, n) — global ORDER
-        is irrelevant — so ids are minted per-partition: local
-        row_number within each shuffle partition plus a partition
-        offset from a tiny (#partitions-row) collected count table,
-        broadcast back. Fully parallel; no single-partition global
-        sort (a bare ``Window.orderBy`` funnels every distinct id
-        through one task — a one-task sort of billions of rows at
-        scale)."""
-        from pyspark.sql import Window
-
-        part = (
-            df.select(unique_id)
-            .distinct()
-            .select(F.col(unique_id), F.spark_partition_id().alias("__part"))
-        )
-        w = Window.partitionBy("__part").orderBy(F.col(unique_id))
-        local = part.withColumn("__local", F.row_number().over(w) - 1)
-        # Pin partition assignment: __part feeds both the offset count
-        # job and the final join, and must agree between the two. Eager
-        # localCheckpoint (not persist) so the pinned copy is released
-        # by the ContextCleaner when unreferenced — persist() entries
-        # stay in the cache registry for the session lifetime.
-        local = local.localCheckpoint(eager=True)
-        counts = {
-            r["__part"]: r["n"]
-            for r in local.groupBy("__part").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        offsets, acc = [], 0
-        for p in sorted(counts):
-            offsets.append((p, acc))
-            acc += counts[p]
-        off_df = self.spark.createDataFrame(
-            offsets or [(0, 0)], "__part int, __offset long"
-        )
-        return local.join(F.broadcast(off_df), on="__part").select(
-            F.col(unique_id), (F.col("__local") + F.col("__offset")).alias("__sid")
-        )
+        ``__sid`` is the id's rank in sorted order, minted by
+        :func:`~ppack_spark.operators.util.distributed_rank` in-plan
+        (no single-task global sort, no eager checkpoint, no collect),
+        so the map depends only on the id set, never on partitioning."""
+        ranked = distributed_rank(df.select(unique_id).distinct(), [unique_id], "__sid")
+        return ranked.select(unique_id, (F.col("__sid") - 1).alias("__sid"))
 
     def estimate_u(
         self,
@@ -138,9 +108,13 @@ class Linker:
         (reference calculate_u_probs, scratch.R:58-98). Samples over
         minted synthetic ids, not the user's id domain — sampling raw
         ids assumes 0-based contiguity and silently produces phantom
-        null-joined pairs otherwise."""
+        null-joined pairs otherwise. Both the sample
+        (:func:`sample_pair_ids_inplan`) and the id map are pure
+        functions of the data and ``seed``, so u is the same on any
+        core count. A self-link counts and maps its one table once."""
         n_a = n_a if n_a is not None else self.data_a.count()
-        n_b = n_b if n_b is not None else self.data_b.count()
+        if n_b is None:
+            n_b = n_a if self.self_link else self.data_b.count()
         id_l = f"{self.spec.unique_id_left}_left"
         id_r = f"{self.spec.unique_id_right}_right"
         sids = sample_pair_ids_inplan(
@@ -148,7 +122,11 @@ class Linker:
             id_left="__sid_l", id_right="__sid_r",
         )
         map_a = self._synthetic_ids(self.data_a, self.spec.unique_id_left)
-        map_b = self._synthetic_ids(self.data_b, self.spec.unique_id_right)
+        map_b = (
+            map_a
+            if self.self_link
+            else self._synthetic_ids(self.data_b, self.spec.unique_id_right)
+        )
         # Equi-joins on __sid; AQE decides broadcast vs shuffle (the id
         # map is table-sized, so no unconditional broadcast hint here).
         random_ids = (

@@ -246,12 +246,13 @@ def snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     account balance (id tiebreak), every pair within a 5-record
     window of the GLOBAL sort order — a pair budget of exactly 4n
     with no quadratic hot block possible. The engine mints the global
-    rank without a one-task sort (range repartition + local
-    row_number + partition offsets) and turns the rank-band predicate
-    into two equi passes on window-sized rank blocks; the oracle
-    replays the same total order with a plain ROW_NUMBER + band
-    self-join, so the hash check proves the distributed rank equals
-    the single-node one. NULLS FIRST pinned on both sides."""
+    rank without a one-task sort (``operators/util.py:distributed_rank``:
+    range buckets, a local row_number and in-plan bucket offsets) and
+    turns the rank-band predicate into two equi passes on window-sized
+    rank blocks; the oracle replays the same total order with a plain
+    ROW_NUMBER + band self-join, so the hash check proves the
+    distributed rank equals the single-node one. NULLS FIRST pinned on
+    both sides."""
     from ..blocking import sorted_neighborhood_pairs
 
     customer = t(spark, sf_dir, "customer")
@@ -528,14 +529,15 @@ def jw_approx_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the JW bucket comparator behind the JVM prefilter — equal pairs
     bucket without Python, pairs failing the sound length/prefix bound
     or the conservative Levenshtein floor ship (NULL, NULL) through
-    Arrow and take the default bucket; only contenders reach the C
+    Arrow and take the default bucket; only contenders reach the numpy
     kernel. Gated on the brand-blocked part-name self-join (TPC-H part
     names are permuted color words — the transposition-heavy case
     where JW and Levenshtein diverge most, so the floor's
-    conservatism is actually exercised: ~75 % of these pairs skip the
-    kernel with zero bucket changes vs plain jw). The oracle replays
-    the prefilter arithmetic verbatim plus DuckDB's own
-    jaro_winkler_similarity.
+    conservatism is actually exercised: at sf0.1, 6,056,375 of the
+    7,998,672 pairs (75.7 %) skip the kernel, counted by replaying the
+    prefilter in DuckDB, and tests/test_similarity.py pins zero bucket
+    changes vs plain jw). The oracle replays the prefilter arithmetic
+    verbatim plus DuckDB's own jaro_winkler_similarity.
 
     The probe side is ``spread()`` first (round 9): part.parquet at
     sf0.1 is one ~1 MB split, so the broadcast self-join and

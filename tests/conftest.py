@@ -92,6 +92,27 @@ def assert_same(
     pd.testing.assert_frame_equal(left, right, check_dtype=check_dtype, check_exact=False, rtol=1e-9, atol=1e-12)
 
 
+def row_number_windows_without_partition(df) -> int:
+    """Count row_number Window operators whose partition spec is
+    empty in the executed plan — the single-task global sort a
+    distributed rank must never produce (the offset-cumsum Window over
+    ``distributed_rank``'s per-bucket COUNT table is sum-based and
+    data-independent, so it is exempt by construction)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    bad = 0
+    for frag in plan.split("Window [")[1:]:
+        head = frag.split("\n", 1)[0]
+        if "row_number" not in head:
+            continue
+        # executed-plan shape: Window [exprs], [partition exprs], [sort]
+        # an empty partition spec renders as "], ["... immediately
+        # followed by the ORDER spec only (two bracket groups, not 3)
+        parts = head.split("], [")
+        if len(parts) < 3:
+            bad += 1
+    return bad
+
+
 def distributed(fn, *args, **kw):
     """``fn(*args, **kw)`` with the graph kernels' driver path disabled
     (``PPACK_DRIVER_MAX_EDGES=0``)."""

@@ -11,7 +11,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import distributed, spy_driver_paths
+from conftest import (
+    distributed,
+    row_number_windows_without_partition,
+    spy_driver_paths,
+)
 
 import ppack_spark.operators.graph as graph
 from ppack_spark.operators.graph import degree_report, pagerank
@@ -203,35 +207,14 @@ def test_pagerank_seed_hardening(spark):
 
 # ------------------------------------------- distributed rank plans
 
-def _row_number_windows_without_partition(df) -> int:
-    """Count row_number Window operators whose partition spec is
-    empty in the executed plan — the single-task global sort the
-    graph module must never produce (the offset-cumsum Window over
-    the per-bucket COUNT table is sum-based and data-independent, so
-    it is exempt by construction)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    bad = 0
-    for frag in plan.split("Window [")[1:]:
-        head = frag.split("\n", 1)[0]
-        if "row_number" not in head:
-            continue
-        # executed-plan shape: Window [exprs], [partition exprs], [sort]
-        # an empty partition spec renders as "], ["... immediately
-        # followed by the ORDER spec only (two bracket groups, not 3)
-        parts = head.split("], [")
-        if len(parts) < 3:
-            bad += 1
-    return bad
-
-
 def test_pagerank_rank_is_distributed(spark):
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a")])
-    assert _row_number_windows_without_partition(pagerank(e, iters=2)) == 0
+    assert row_number_windows_without_partition(pagerank(e, iters=2)) == 0
 
 
 def test_degree_report_rank_is_distributed(spark):
     e = _edges(spark, [("a", "b"), ("b", "c")])
-    assert _row_number_windows_without_partition(degree_report(e)) == 0
+    assert row_number_windows_without_partition(degree_report(e)) == 0
 
 
 def test_distributed_rank_matches_global_window(spark):
@@ -344,7 +327,7 @@ def test_hits_validates_iters(spark):
 
 def test_hits_rank_is_distributed(spark):
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a")])
-    assert _row_number_windows_without_partition(hits(e, iters=2)) == 0
+    assert row_number_windows_without_partition(hits(e, iters=2)) == 0
 
 
 # ------------------------------------------- triangle census (E172)

@@ -100,6 +100,52 @@ def test_estimate_u_with_one_based_ids(spark, tables):
     assert set(u["c_mktsegment"]) == {"agree", "disagree"}
 
 
+# captured once from the hashed sample; pins u across core counts
+# (run this file under SPARK_GRAFT_CPUS=2 and =4)
+GOLDEN_U_SEED7 = {
+    "acctbal": {"close": 0.027, "far": 0.823, "near": 0.15},
+    "c_mktsegment": {"agree": 0.192, "disagree": 0.808},
+}
+
+
+def test_estimate_u_independent_of_partitioning(spark, tables):
+    """The u-sample is a pure function of (seed, row id) and the id
+    map a pure function of the id set, so u must not move with the
+    input's partition count or the session's core count."""
+    customer = tables["customer"]
+    u1, u7 = (
+        pp.Linker(spark, customer.repartition(k), None, _spec()).estimate_u(
+            size=2000, seed=7
+        )
+        for k in (1, 7)
+    )
+    assert u1 == u7
+    for name, levels in GOLDEN_U_SEED7.items():
+        assert u1[name] == pytest.approx(levels, abs=1e-12)
+    assert set(u1) == set(GOLDEN_U_SEED7)
+
+
+def test_self_link_builds_one_id_map(spark, tables, monkeypatch):
+    """A self-link's B side is its A side: estimate_u mints one
+    synthetic-id map and reuses it; an A-B link mints one per side."""
+    customer = tables["customer"]
+    real = pp.Linker._synthetic_ids
+    calls = []
+
+    def spy(self, df, unique_id):
+        calls.append(unique_id)
+        return real(self, df, unique_id)
+
+    monkeypatch.setattr(pp.Linker, "_synthetic_ids", spy)
+    pp.Linker(spark, customer, None, _spec()).estimate_u(size=200, seed=7)
+    assert calls == ["c_custkey"]
+    calls.clear()
+    a = customer.filter(F.col("c_custkey") % 2 == 0)
+    b = customer.filter(F.col("c_custkey") % 2 == 1)
+    pp.Linker(spark, a, b, _spec()).estimate_u(size=200, seed=7)
+    assert calls == ["c_custkey", "c_custkey"]
+
+
 def test_estimate_two_dataset_denominator(spark, tables):
     """Two-dataset linkage uses n_a*n_b, not the self-link n^2/2."""
     customer = tables["customer"]

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, row_number_windows_without_partition
 
 import __spark_entry__ as entrymod
 
@@ -75,8 +75,10 @@ def test_jw_udf_evaluated_once(spark, tables, queries):
 
 def test_synthetic_ids_fully_parallel_and_contiguous(spark, tables):
     """u-sampling's synthetic-id minting must never funnel the id
-    domain through one task (no single-partition Exchange feeding a
-    global Sort), and must still be a bijection onto [0, n)."""
+    domain through one task (no row_number Window without a partition
+    spec; ``distributed_rank``'s one single-partition exchange carries
+    only its per-bucket count table), and must still be a bijection
+    onto [0, n)."""
     import ppack_spark as pp
 
     spec = pp.LinkerSpec(
@@ -87,7 +89,7 @@ def test_synthetic_ids_fully_parallel_and_contiguous(spark, tables):
     )
     linker = pp.Linker(spark, tables["customer"], None, spec)
     sids = linker._synthetic_ids(tables["customer"], "c_custkey")
-    assert "Exchange SinglePartition" not in _plan(sids)
+    assert row_number_windows_without_partition(sids) == 0
     n = tables["customer"].select("c_custkey").distinct().count()
     stats = sids.agg(
         F.min("__sid").alias("lo"),

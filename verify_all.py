@@ -25,7 +25,9 @@ Census freshness is MECHANICAL (round-9 verdict item 6 — a stale
 * a full-census run REFUSES to start if the working tree has
   uncommitted changes under ``ppack_spark/`` or ``__spark_entry__.py``
   (the artifact would describe code no commit holds), and stamps the
-  artifact with the HEAD commit it ran at;
+  artifact with the HEAD commit it ran at; a ``SPARK_GRAFT_VERIFY_ONLY``
+  run is not a census, so it runs on a dirty tree and stamps
+  ``census_commit: null``;
 * ``python verify_all.py --check [artifact...]`` asserts that NO
   engine file changed between each artifact's stamped commit and the
   current HEAD (``git diff --name-only <census_commit>..HEAD --
@@ -142,12 +144,16 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_full.json"
 
+    only = os.environ.get("SPARK_GRAFT_VERIFY_ONLY")
+
     # full-census runs must describe a commit: refuse a dirty engine
     # tree (SPARK_GRAFT_ALLOW_DIRTY=1 overrides for local iteration —
-    # such artifacts carry no commit stamp and --check flags them)
+    # such artifacts carry no commit stamp and --check flags them).
+    # Targeted runs write no full census, so they run on a dirty tree
+    # and stamp no commit.
     dirty = _engine_dirty()
     allow_dirty = os.environ.get("SPARK_GRAFT_ALLOW_DIRTY")
-    if dirty and not allow_dirty:
+    if dirty and not only and not allow_dirty:
         print("REFUSING full census: uncommitted engine changes "
               f"(commit first, or set SPARK_GRAFT_ALLOW_DIRTY=1): {dirty}")
         sys.exit(1)
@@ -169,7 +175,6 @@ def main() -> None:
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
     qs, osql = entry.queries(), entry.oracle_sql()
-    only = os.environ.get("SPARK_GRAFT_VERIFY_ONLY")
     if only:
         wanted = set(only.split(","))
         qs = {n: f for n, f in qs.items() if n in wanted}
