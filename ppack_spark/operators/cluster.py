@@ -36,7 +36,7 @@ plan but exact on fixture-sized inputs (plans/registry_data.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .util import bounded_collect, cut_lineage
@@ -62,11 +62,16 @@ def _label_round(e: DataFrame, labels: DataFrame) -> tuple[DataFrame, int]:
     new labels back to old (r14 optimization, guide §2.4): each node's
     old label is tagged onto its own ``labels`` row as ``__old`` (the
     nbr/ptr rows carry NULL, and every node has exactly one labels
-    row, so ``min(__old)`` recovers it per group), making the
-    convergence check a narrow filter-count over the checkpointed
-    aggregate — the old formulation re-shuffled BOTH node-sized label
-    tables once per round, because the lineage cut drops the
-    partitioning Catalyst would need to elide the join exchanges."""
+    row, so ``min(__old)`` recovers it per group), and the count of
+    ``component < __old`` is observed on the aggregate's own
+    lineage-cut job — no join of new labels back to old (which
+    re-shuffled BOTH node-sized label tables, the lineage cut having
+    dropped the partitioning Catalyst needs to elide the exchanges)
+    and no separate filter-count job.
+
+    An observed metric can over-count when a stage is retried, never
+    under-count: a spurious non-zero costs one more round, but the
+    loop can never stop while a label still moves."""
     nbr = (
         e.join(labels, e["dst"] == labels["node"])
         .select(e["src"].alias("node"), F.col("component"))
@@ -84,14 +89,17 @@ def _label_round(e: DataFrame, labels: DataFrame) -> tuple[DataFrame, int]:
         .unionByName(nbr, allowMissingColumns=True)
         .unionByName(ptr, allowMissingColumns=True)
     )
+    obs = Observation()
     agg = cut_lineage(
-        merged.groupBy("node").agg(
+        merged.groupBy("node")
+        .agg(
             F.min("component").alias("component"),
             F.min("__old").alias("__old"),
         )
+        .observe(obs, F.count_if(F.col("component") < F.col("__old")).alias("changed"))
+        .select("node", "component")
     )
-    changed = agg.filter(F.col("component") < F.col("__old")).count()
-    return agg.select("node", "component"), changed
+    return agg, obs.get["changed"]
 
 
 def _large_star(e: DataFrame) -> DataFrame:

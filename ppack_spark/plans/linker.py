@@ -2,7 +2,10 @@
 object (blocking → pairs → comparisons → pattern counts → EM →
 scoring), mirroring the end-to-end driver script scratch.R:17-139.
 
-Everything O(pairs) stays a lazy DataFrame plan; only the
+Compare once per fit, like the reference (scratch.R:51-54, 128-134):
+one ids + gammas frame is cut per Linker (:meth:`Linker.gammas`), and
+pattern counts, scoring and clustering read it; inputs and spec are
+fixed after construction, and the frame holds no m, u or λ. Only the
 pattern-counts sufficient statistic (≤ ∏ levels rows) is collected for
 the driver-side EM.
 """
@@ -14,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..blocking import extract_blocks, ordered_pairs
 from ..em import FSParams, run_em
-from ..operators.util import distributed_rank
+from ..operators.util import cut_lineage, distributed_rank
 from ..pairs import compute_pairs_dataset, sample_pair_ids_inplan
 from ..patterns import (
     collect_probabilities,
@@ -42,8 +45,9 @@ class Linker:
         self.self_link = data_b is None
         self.spec = spec
         self.params: FSParams | None = None
+        self._gammas: DataFrame | None = None
 
-    # --- plan builders (all lazy) -------------------------------------
+    # --- plan builders (lazy) and the one cut comparison frame -------
     def candidate_pairs(self) -> DataFrame:
         pairs = extract_blocks(
             self.data_a,
@@ -79,9 +83,18 @@ class Linker:
         )
         return do_comparisons(self.pairs_dataset(pair_ids), self.spec.comparator_exprs(), keep=keep)
 
+    def gammas(self) -> DataFrame:
+        """:meth:`comparisons` (pair ids + one gamma per comparator) cut
+        with ``cut_lineage`` on first use and kept, so blocking,
+        rehydration and the comparators run once per Linker."""
+        if self._gammas is None:
+            self._gammas = cut_lineage(self.comparisons(keep_ids=True))
+        return self._gammas
+
     def pattern_counts(self) -> DataFrame:
+        """Group-by-count over the gammas of :meth:`gammas`."""
         gammas = [c.name for c in self.spec.comparisons]
-        return pattern_counts(self.comparisons(keep_ids=False), gammas)
+        return pattern_counts(self.gammas(), gammas)
 
     # --- estimation ---------------------------------------------------
     def _synthetic_ids(self, df: DataFrame, unique_id: str) -> DataFrame:
@@ -175,10 +188,12 @@ class Linker:
 
     # --- scoring ------------------------------------------------------
     def score(self, threshold: float | None = None) -> DataFrame:
+        """The ``weight`` column of the current ``params`` added to the
+        :meth:`gammas` frame (optionally thresholded and ranked)."""
         if self.params is None:
             raise RuntimeError("call estimate() first")
         gamma_cols = {c.name: c.name for c in self.spec.comparisons}
-        scored = score_pairs(self.comparisons(keep_ids=True), self.params, gamma_cols)
+        scored = score_pairs(self.gammas(), self.params, gamma_cols)
         if threshold is not None:
             scored = threshold_and_rank(scored, threshold)
         return scored
@@ -202,9 +217,12 @@ class Linker:
         ``F.col("nation_left") == F.col("nation_right")``), the same
         contract as the comparator expressions; it rides the
         comparison projection as an extra column, so no second pass
-        over the inputs is ever made. Returns one ``'sweep'`` row per
-        τ and one ``'best'`` row (see :func:`evaluation_report` for
-        the schema and boundary semantics)."""
+        over the inputs is ever made. That is also why this plan stays
+        lazy instead of reading :meth:`gammas`: the cut frame holds
+        only ids and gammas, and the truth column needs the rehydrated
+        pair rows. Returns one ``'sweep'`` row per τ and one ``'best'``
+        row (see :func:`evaluation_report` for the schema and boundary
+        semantics)."""
         from ..eval import evaluation_report
         from ..exprs import suffixed
 
@@ -236,7 +254,8 @@ class Linker:
         reference leaves to its ground-truth ``cluster`` column,
         scratch.R:131-133). Returns data_a plus a ``cluster_id``
         column (the min member id); unmatched records are singleton
-        clusters. The one components kernel,
+        clusters; the edges are read from :meth:`gammas`. The one
+        components kernel,
         :func:`~ppack_spark.operators.cluster.connected_components`,
         picks its own path: driver union-find within the driver bound,
         otherwise min-label rounds with a star finish on the
@@ -268,7 +287,8 @@ class Linker:
         """Two-dataset-safe cluster resolution. Node ids are prefixed
         with a source-dataset tag (``a:``/``b:``, the splink
         disambiguation) before connected components, so overlapping id
-        domains can never conflate A's record k with B's record k.
+        domains can never conflate A's record k with B's record k. The
+        edges are read from the :meth:`gammas` frame, like ``cluster()``.
 
         Returns ``(source, <unique_id>, cluster_id)`` covering every
         record of both inputs; ``cluster_id`` is an opaque string label

@@ -200,6 +200,28 @@ def test_adaptive_kernel_random_graph_parity(spark):
     )
 
 
+def test_label_round_observed_count_matches_filter_count(spark):
+    """The changed-count ``_label_round`` observes on its lineage-cut
+    job equals a separate count of nodes whose label fell, round by
+    round, on a 6-node chain whose labels move for four rounds."""
+    chain = [(i, i + 1) for i in range(5)]
+    e = spark.createDataFrame(
+        chain + [(b, a) for a, b in chain], "src long, dst long"
+    )
+    labels = spark.createDataFrame([(i, i) for i in range(6)], "node long, component long")
+    seen = []
+    while True:
+        new, changed = cluster._label_round(e, labels)
+        old = labels.select("node", F.col("component").alias("__old"))
+        assert changed == new.join(old, "node").filter(F.col("component") < F.col("__old")).count()
+        seen.append(changed)
+        labels = new
+        if changed == 0:
+            break
+    assert seen == [5, 4, 3, 1, 0]
+    assert _components_dict(labels) == {i: 0 for i in range(6)}
+
+
 def test_non_convergence_raises(spark, monkeypatch):
     """Exhausting the star round cap before the fixpoint must raise —
     silent partial propagation hands out wrong (split) component ids.

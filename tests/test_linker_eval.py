@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import ppack_spark as pp
-from ppack_spark.em import run_em
+from ppack_spark.em import FSParams, run_em
 from ppack_spark.eval import calibration_curve, fit_calibration, precision_at_threshold
+from ppack_spark.patterns import pattern_counts
 from ppack_spark.scoring import label_with_truth, posterior_probability, score_pairs
 
 from conftest import SF_DIR
@@ -175,6 +176,83 @@ def test_jw_comparison_end_to_end(spark, tables):
     scored = linker.score()
     assert "weight" in scored.columns
     assert scored.count() > 0
+
+
+# ------------------------------------------------- compare once per fit
+
+
+def _count_comparisons(monkeypatch):
+    """Record every ``Linker.comparisons`` plan build."""
+    real = pp.Linker.comparisons
+    calls = []
+
+    def spy(self, *a, **kw):
+        calls.append(kw)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(pp.Linker, "comparisons", spy)
+    return calls
+
+
+def _hand_params(close: float) -> FSParams:
+    return FSParams(
+        m_probabilities={
+            "c_mktsegment": {"agree": 0.9, "disagree": 0.1},
+            "acctbal": {"close": close, "near": 0.3, "far": 0.7 - close},
+        },
+        u_probabilities={
+            "c_mktsegment": {"agree": 0.2, "disagree": 0.8},
+            "acctbal": {"close": 0.05, "near": 0.15, "far": 0.8},
+        },
+        lam=1e-3,
+        total_pairs=1e4,
+    )
+
+
+def test_fit_compares_once(spark, tables, monkeypatch):
+    """estimate() → score() → cluster() build the comparison plan once
+    and read its cut frame afterwards."""
+    calls = _count_comparisons(monkeypatch)
+    linker = pp.Linker(spark, tables["customer"], None, _spec())
+    linker.estimate(maxiter=3, u_sample_size=500)
+    linker.score(threshold=0.0).collect()
+    linker.cluster(threshold=1.5).collect()
+    assert len(calls) == 1
+
+
+def test_ab_link_compares_once(spark, tables, monkeypatch):
+    """The same on an A-B link, ending in cluster_links()."""
+    calls = _count_comparisons(monkeypatch)
+    customer = tables["customer"]
+    a = customer.filter(F.col("c_custkey") % 2 == 0)
+    b = customer.filter(F.col("c_custkey") % 2 == 1)
+    linker = pp.Linker(spark, a, b, _spec())
+    linker.estimate(maxiter=3, u_sample_size=500)
+    linker.score(threshold=0.0).collect()
+    linker.cluster_links(threshold=1.0).collect()
+    assert len(calls) == 1
+
+
+def test_gammas_frame_holds_no_parameters(spark, tables):
+    """Replacing ``params`` after the frame is cut scores with the new
+    parameters, exactly as the lazy comparison plan does."""
+    linker = pp.Linker(spark, tables["customer"], None, _spec())
+    linker.params = _hand_params(0.5)
+    linker.score().collect()
+    params = _hand_params(0.1)
+    linker.params = params
+    ids = ["c_custkey_left", "c_custkey_right"]
+    gammas = {c.name: c.name for c in linker.spec.comparisons}
+    lazy = score_pairs(linker.comparisons(), params, gammas)
+    got = sorted(linker.score().select(*ids, "weight").collect())
+    assert got == sorted(lazy.select(*ids, "weight").collect())
+
+
+def test_pattern_counts_read_the_frame(spark, tables):
+    linker = pp.Linker(spark, tables["customer"], None, _spec())
+    names = [c.name for c in linker.spec.comparisons]
+    lazy = pattern_counts(linker.comparisons(keep_ids=False), names)
+    assert sorted(linker.pattern_counts().collect()) == sorted(lazy.collect())
 
 
 # ---------------------------------------------------------- eval layer
