@@ -20,7 +20,9 @@ Four families, each a distinct cost/recall point:
   and ~50× slower.
 * **n-gram Jaccard** — exact set similarity over word shingles for
   verification of LSH candidates (array_intersect/array_union,
-  JVM-side).
+  JVM-side), and the exact prefix-filter join that finds every pair
+  at a threshold with no LSH miss rate (``jaccard_prefix_join``; its
+  R-S form ``jaccard_prefix_join_ab`` is the same kernel).
 
 Hash choice: md5 — bit-identical in Spark and DuckDB, so every
 operator here is oracle-checkable. MinHash derives all seeds from one
@@ -1108,6 +1110,220 @@ def tfidf_cosine_pairs(
     )
 
 
+# Bucket count of the prefix order's frequency table. A groupBy over
+# the FULL shingle vocabulary (billions of distinct k-grams in a web
+# corpus — the one stage of the r11 plan that was not sublinear-by-key)
+# is replaced by hashing shingles into this many buckets and ordering
+# by the BUCKET count: the group table is fixed-size (map-side partial
+# agg emits ≤ _DF_BUCKETS rows per task), it BROADCASTS back (so the
+# corpus token stream never shuffles for the df join either — two
+# full-vocabulary shuffles removed), and hot shingles still sort last
+# because their buckets are hot. Rare shingles colliding with a hot
+# bucket merely fall out of the prefix in favor of other rare
+# shingles — candidate quality degrades gracefully with bucket count,
+# correctness not at all (the prefix lemma holds for any consistent
+# total order).
+_DF_BUCKETS = 1 << 16
+
+
+def _shingled(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    block_col: str | None = None,
+) -> DataFrame:
+    """(__id, [__blk], sh, sz, shh, __hdup) per non-empty document:
+    distinct shingles, their count, xxhash64s and hash duplicates."""
+    blk = [F.col(block_col).alias("__blk")] if block_col else []
+    sh = spread(df).select(
+        F.col(id_col).alias("__id"), *blk, word_shingles(text_col, k).alias("sh")
+    )
+    # tokenize ONCE: four subtrees read the shingled corpus (the df
+    # pass, the prefix build, and both verification sides) and each
+    # re-runs the shingling map over the raw text without a cut —
+    # materializing the tokenized records is the standard PPJoin
+    # working set (every exact set-similarity join re-reads them for
+    # verification anyway). ``shh``/``__hdup`` feed the hashed
+    # verification prefilter (see _prefix_join).
+    return (
+        sh.filter(F.size("sh") > 0)
+        .withColumn("sz", F.size("sh"))
+        .withColumn("shh", F.transform("sh", lambda x: F.xxhash64(x)))
+        .withColumn("__hdup", F.col("sz") - F.size(F.array_distinct("shh")))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _prefix_join(
+    sides: tuple[DataFrame, ...],
+    threshold: float,
+    blocked: bool,
+    strict: bool,
+) -> DataFrame:
+    """The prefix-filter join kernel over one (self-join) or two (R-S
+    join) :func:`_shingled` inputs: (id_left, id_right, jaccard) for
+    every pair with Jaccard ≥ ``threshold`` (> when ``strict``), left
+    ids from ``sides[0]`` and right ids from ``sides[-1]``. The
+    self-join is the R-S join with R = S plus ``id_left < id_right``;
+    ``blocked`` adds equal ``__blk`` to the candidate equi-join."""
+    if not (0.0 < threshold <= 1.0):
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    t = float(threshold)
+    bcols = ["__blk"] if blocked else []
+    exs = [
+        s.select("__id", *bcols, "sz", F.explode("sh").alias("tok"))
+        for s in sides
+    ]
+    # both sides MUST order their shingles by the SAME total order for
+    # the prefix lemma to hold across corpora, so an R-S join counts
+    # frequencies over the UNION of both token streams
+    toks = exs[0] if len(exs) == 1 else exs[0].unionByName(exs[1])
+    bucket = F.pmod(F.crc32(F.col("tok")), F.lit(_DF_BUCKETS))
+    bfreq = (
+        toks.select(bucket.alias("__b"))
+        .groupBy("__b")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    pref_len = (
+        F.col("sz") - F.ceil(F.lit(t) * F.col("sz")).cast("int") + F.lit(1)
+    )
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct(F.col("df"), F.col("tok")))),
+        lambda s: s["tok"],
+    )
+
+    def _prefix(ex: DataFrame) -> DataFrame:
+        # the exploded prefix table is read by BOTH legs of the
+        # candidate join (a self-join's one table twice); without a cut
+        # each leg re-runs the collect_list ordering groupBy — the
+        # plan's most expensive stage — and the shared df pass
+        # re-evaluates the exploded streams. Narrow (id, sz, pos, tok)
+        # rows only. posexplode keeps each prefix token's 0-based
+        # position in the FULL frequency-ordered shingle array (the
+        # prefix IS its first pref_len elements), feeding the
+        # positional filter below.
+        return (
+            ex.withColumn("__b", bucket)
+            .join(F.broadcast(bfreq), "__b")
+            .drop("__b")
+            .groupBy("__id", *bcols, "sz")
+            .agg(ordered.alias("__ord"))
+            .select(
+                "__id", *bcols, "sz",
+                F.slice(F.col("__ord"), 1, pref_len).alias("prefix"),
+            )
+            .select("__id", *bcols, "sz", F.posexplode("prefix").alias("pos", "tok"))
+            .localCheckpoint(eager=False)
+        )
+
+    pexs = [_prefix(ex) for ex in exs]
+    a, b = pexs[0].alias("a"), pexs[-1].alias("b")
+    on = F.col("a.tok") == F.col("b.tok")
+    if blocked:
+        on = on & (F.col("a.__blk") == F.col("b.__blk"))
+    # PPJoin positional filter (Xiao et al. 2008 §3.1): a candidate
+    # row matches token w at ordered positions (pa, pb), so the
+    # overlap is at most min(pa, pb) common tokens before w, w
+    # itself, and min(sz_a-pa-1, sz_b-pb-1) after w — while J ≥ t
+    # forces overlap ≥ t/(1+t)·(sz_a+sz_b). Rows whose bound cannot
+    # reach that are dropped BEFORE the distinct and the verification
+    # join. The bound holds for EVERY shared prefix token (the common
+    # tokens before/after w are subsets of each side's tokens
+    # before/after w under the one global order), so a qualifying
+    # pair keeps all its rows and the output is unchanged; the
+    # epsilon keeps float rounding on the prune side harmless (a
+    # spared candidate merely gets verified).
+    overlap_bound = (
+        F.least(F.col("a.pos"), F.col("b.pos"))
+        + F.lit(1)
+        + F.least(
+            F.col("a.sz") - F.col("a.pos") - F.lit(1),
+            F.col("b.sz") - F.col("b.pos") - F.lit(1),
+        )
+    ).cast("double")
+    min_overlap = F.lit(t / (1.0 + t)) * (F.col("a.sz") + F.col("b.sz"))
+    keep = F.col("b.sz") >= F.lit(t) * F.col("a.sz")
+    if len(sides) == 1:
+        keep = (F.col("a.__id") < F.col("b.__id")) & keep
+    keep = (
+        keep
+        & (F.col("a.sz") >= F.lit(t) * F.col("b.sz"))
+        # prune-side epsilon is RELATIVE (1e-12·(sz_a+sz_b), far
+        # above the ~2.2e-16·(sz_a+sz_b) double rounding of the
+        # bound) plus the old 1e-9 absolute floor: an absolute
+        # epsilon alone stops covering rounding error once a
+        # pair's combined shingle count passes ~4.5e6, and an
+        # exact operator may never prune a boundary pair
+        & (
+            overlap_bound
+            + F.lit(1e-9)
+            + F.lit(1e-12) * (F.col("a.sz") + F.col("b.sz"))
+            >= min_overlap
+        )
+    )
+    cand = (
+        a.join(b, on)
+        .filter(keep)
+        .select(
+            F.col("a.__id").alias("id_left"), F.col("b.__id").alias("id_right")
+        )
+        .distinct()
+    )
+    # Hashed verification prefilter (exactness-preserving): candidate
+    # pairs vastly outnumber true pairs, and the exact string-array
+    # intersect is the most expensive per-row work in the plan. First
+    # intersect the 64-bit xxhash64 shingle arrays — cheap long
+    # compares, no string hashing — and reject pairs whose HASH
+    # intersection already caps the Jaccard below t. The hash
+    # intersection is an upper bound on the true one up to collisions
+    # WITHIN the common set, and those are bounded by either side's
+    # internal duplicate count (common ⊆ A and ⊆ B), so
+    # I_true ≤ |h(A)∩h(B)| + min(hdup_A, hdup_B): no true pair is ever
+    # rejected, and only the surviving sliver pays the exact string
+    # intersect (which alone decides the output).
+    sh_l, sh_r = sides[0], sides[-1]
+    hl, hr = (
+        s.select(
+            F.col("__id").alias(f"id_{side}"),
+            F.col("sz").alias(f"__sz_{x}"),
+            F.col("shh").alias(f"__shh_{x}"),
+            F.col("__hdup").alias(f"__hd_{x}"),
+        )
+        for s, side, x in ((sh_l, "left", "l"), (sh_r, "right", "r"))
+    )
+    ub = (
+        F.size(F.array_intersect("__shh_l", "__shh_r"))
+        + F.least("__hd_l", "__hd_r")
+    ).cast("double")
+    szsum = (F.col("__sz_l") + F.col("__sz_r")).cast("double")
+    survivors = (
+        cand.join(hl, "id_left")
+        .join(hr, "id_right")
+        # J ≥ t ⟺ (1+t)·I ≥ t·(sz_l+sz_r); same relative+absolute
+        # prune-side epsilon as the positional filter above
+        .filter(
+            F.lit(1.0 + t) * ub + F.lit(1e-9) + F.lit(1e-12) * szsum
+            >= F.lit(t) * szsum
+        )
+        .select("id_left", "id_right")
+    )
+    left = sh_l.select(F.col("__id").alias("id_left"), F.col("sh").alias("sh_l"))
+    right = sh_r.select(F.col("__id").alias("id_right"), F.col("sh").alias("sh_r"))
+    inter = F.size(F.array_intersect(F.col("sh_l"), F.col("sh_r")))
+    union = F.size("sh_l") + F.size("sh_r") - inter
+    jac = inter.cast("double") / union.cast("double")
+    return (
+        survivors.join(left, "id_left")
+        .join(right, "id_right")
+        .withColumn("jaccard", jac)
+        .filter(
+            F.col("jaccard") > F.lit(t) if strict else F.col("jaccard") >= F.lit(t)
+        )
+        .select("id_left", "id_right", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def jaccard_prefix_join(
     df: DataFrame,
     text_col: str = "text",
@@ -1115,7 +1331,6 @@ def jaccard_prefix_join(
     k: int = 3,
     threshold: float = 0.5,
     block_col: str | None = None,
-    df_buckets: int | None = 1 << 16,
     strict: bool = False,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join at ``threshold`` via prefix
@@ -1140,21 +1355,6 @@ def jaccard_prefix_join(
     prunes candidates before verification; survivors verify exactly
     with one JVM-side array_intersect over the full shingle sets.
 
-    ``df_buckets`` (default 2^16) bounds the frequency pass for 100 TB:
-    instead of a groupBy over the FULL shingle vocabulary (billions of
-    distinct k-grams in a web corpus — the one stage of the r11 plan
-    that was not sublinear-by-key), shingles hash into ``df_buckets``
-    buckets and the ordering key is the BUCKET count — the group table
-    is fixed-size (map-side partial agg emits ≤ df_buckets rows per
-    task), it BROADCASTS back (so the corpus token stream never
-    shuffles for the df join either — two full-vocabulary shuffles
-    removed), and hot shingles still sort last because their buckets
-    are hot. Rare shingles colliding with a hot bucket merely fall out
-    of the prefix in favor of other rare shingles — candidate quality
-    degrades gracefully with bucket count, correctness not at all.
-    Pass ``df_buckets=None`` for the exact-df ordering (small corpora
-    / the tightest prefixes).
-
     ``block_col`` optionally restricts pairs to equal blocking keys:
     the key joins into the candidate equi-join (tok AND block must
     match), so prefix filtering and blocking compose — strictly fewer
@@ -1173,178 +1373,8 @@ def jaccard_prefix_join(
     to 6. Cross-checked against the brute-force
     ``ngram_jaccard_pairs`` in tests/test_dedup.py.
     """
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    t = float(threshold)
-    blk = [F.col(block_col).alias("__blk")] if block_col else []
-    sh = spread(df).select(
-        F.col(id_col).alias("__id"), *blk, word_shingles(text_col, k).alias("sh")
-    )
-    # tokenize ONCE: four subtrees read the shingled corpus (the df
-    # pass, the prefix build, and both verification sides) and each
-    # re-runs the shingling map over the raw text without a cut —
-    # materializing the tokenized records is the standard PPJoin
-    # working set (every exact set-similarity join re-reads them for
-    # verification anyway). ``shh``/``__hdup`` feed the hashed
-    # verification prefilter (see _hash_verify_bound below).
-    sh = (
-        sh.filter(F.size("sh") > 0)
-        .withColumn("sz", F.size("sh"))
-        .withColumn("shh", F.transform("sh", lambda x: F.xxhash64(x)))
-        .withColumn("__hdup", F.col("sz") - F.size(F.array_distinct("shh")))
-        .localCheckpoint(eager=False)
-    )
-    bcols = ["__blk"] if block_col else []
-    ex = sh.select("__id", *bcols, "sz", F.explode("sh").alias("tok"))
-    if df_buckets is None:
-        dfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        with_df = ex.join(dfreq, "tok")
-    else:
-        b = int(df_buckets)
-        if b < 2:
-            raise ValueError(f"df_buckets must be >= 2, got {df_buckets}")
-        bucket = F.pmod(F.crc32(F.col("tok")), F.lit(b))
-        bfreq = (
-            ex.select(bucket.alias("__b"))
-            .groupBy("__b")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-        with_df = (
-            ex.withColumn("__b", bucket)
-            .join(F.broadcast(bfreq), "__b")
-            .drop("__b")
-        )
-    pref_len = (
-        F.col("sz") - F.ceil(F.lit(t) * F.col("sz")).cast("int") + F.lit(1)
-    )
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct(F.col("df"), F.col("tok")))),
-        lambda s: s["tok"],
-    )
-    prefixes = (
-        with_df
-        .groupBy("__id", *bcols, "sz")
-        .agg(ordered.alias("__ord"))
-        .select(
-            "__id", *bcols, "sz",
-            F.slice(F.col("__ord"), 1, pref_len).alias("prefix"),
-        )
-    )
-    # the exploded prefix table is read by BOTH legs of the candidate
-    # self-join; without a cut each leg re-runs the collect_list
-    # ordering groupBy — the plan's most expensive stage. Narrow
-    # (id, sz, pos, tok) rows only. posexplode keeps each prefix
-    # token's 0-based position in the FULL frequency-ordered shingle
-    # array (the prefix IS its first pref_len elements), feeding the
-    # positional filter below.
-    pex = prefixes.select(
-        "__id", *bcols, "sz", F.posexplode("prefix").alias("pos", "tok")
-    ).localCheckpoint(eager=False)
-    a, b2 = pex.alias("a"), pex.alias("b")
-    on = F.col("a.tok") == F.col("b.tok")
-    if block_col:
-        on = on & (F.col("a.__blk") == F.col("b.__blk"))
-    # PPJoin positional filter (Xiao et al. 2008 §3.1): a candidate
-    # row matches token w at ordered positions (pa, pb), so the
-    # overlap is at most min(pa, pb) common tokens before w, w
-    # itself, and min(sz_a-pa-1, sz_b-pb-1) after w — while J ≥ t
-    # forces overlap ≥ t/(1+t)·(sz_a+sz_b). Rows whose bound cannot
-    # reach that are dropped BEFORE the distinct and the verification
-    # join. The bound holds for EVERY shared prefix token (the common
-    # tokens before/after w are subsets of each side's tokens
-    # before/after w under the one global order), so a qualifying
-    # pair keeps all its rows and the output is unchanged; the
-    # epsilon keeps float rounding on the prune side harmless (a
-    # spared candidate merely gets verified).
-    overlap_bound = (
-        F.least(F.col("a.pos"), F.col("b.pos"))
-        + F.lit(1)
-        + F.least(
-            F.col("a.sz") - F.col("a.pos") - F.lit(1),
-            F.col("b.sz") - F.col("b.pos") - F.lit(1),
-        )
-    ).cast("double")
-    min_overlap = F.lit(t / (1.0 + t)) * (F.col("a.sz") + F.col("b.sz"))
-    cand = (
-        a.join(b2, on)
-        .filter(
-            (F.col("a.__id") < F.col("b.__id"))
-            & (F.col("b.sz") >= F.lit(t) * F.col("a.sz"))
-            & (F.col("a.sz") >= F.lit(t) * F.col("b.sz"))
-            # prune-side epsilon is RELATIVE (1e-12·(sz_a+sz_b), far
-            # above the ~2.2e-16·(sz_a+sz_b) double rounding of the
-            # bound) plus the old 1e-9 absolute floor: an absolute
-            # epsilon alone stops covering rounding error once a
-            # pair's combined shingle count passes ~4.5e6, and an
-            # exact operator may never prune a boundary pair
-            & (
-                overlap_bound
-                + F.lit(1e-9)
-                + F.lit(1e-12) * (F.col("a.sz") + F.col("b.sz"))
-                >= min_overlap
-            )
-        )
-        .select(
-            F.col("a.__id").alias("id_left"), F.col("b.__id").alias("id_right")
-        )
-        .distinct()
-    )
-    # Hashed verification prefilter (exactness-preserving): candidate
-    # pairs vastly outnumber true pairs, and the exact string-array
-    # intersect is the most expensive per-row work in the plan. First
-    # intersect the 64-bit xxhash64 shingle arrays — cheap long
-    # compares, no string hashing — and reject pairs whose HASH
-    # intersection already caps the Jaccard below t. The hash
-    # intersection is an upper bound on the true one up to collisions
-    # WITHIN the common set, and those are bounded by either side's
-    # internal duplicate count (common ⊆ A and ⊆ B), so
-    # I_true ≤ |h(A)∩h(B)| + min(hdup_A, hdup_B): no true pair is ever
-    # rejected, and only the surviving sliver pays the exact string
-    # intersect (which alone decides the output).
-    hl = sh.select(
-        F.col("__id").alias("id_left"),
-        F.col("sz").alias("__sz_l"),
-        F.col("shh").alias("__shh_l"),
-        F.col("__hdup").alias("__hd_l"),
-    )
-    hr = sh.select(
-        F.col("__id").alias("id_right"),
-        F.col("sz").alias("__sz_r"),
-        F.col("shh").alias("__shh_r"),
-        F.col("__hdup").alias("__hd_r"),
-    )
-    ub = (
-        F.size(F.array_intersect("__shh_l", "__shh_r"))
-        + F.least("__hd_l", "__hd_r")
-    ).cast("double")
-    szsum = (F.col("__sz_l") + F.col("__sz_r")).cast("double")
-    survivors = (
-        cand.join(hl, "id_left")
-        .join(hr, "id_right")
-        # J ≥ t ⟺ (1+t)·I ≥ t·(sz_l+sz_r); same relative+absolute
-        # prune-side epsilon as the positional filter above
-        .filter(
-            F.lit(1.0 + t) * ub + F.lit(1e-9) + F.lit(1e-12) * szsum
-            >= F.lit(t) * szsum
-        )
-        .select("id_left", "id_right")
-    )
-    left = sh.select(F.col("__id").alias("id_left"), F.col("sh").alias("sh_l"))
-    right = sh.select(
-        F.col("__id").alias("id_right"), F.col("sh").alias("sh_r")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_l"), F.col("sh_r")))
-    union = F.size("sh_l") + F.size("sh_r") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        survivors.join(left, "id_left")
-        .join(right, "id_right")
-        .withColumn("jaccard", jac)
-        .filter(
-            F.col("jaccard") > F.lit(t) if strict else F.col("jaccard") >= F.lit(t)
-        )
-        .select("id_left", "id_right", F.round("jaccard", 6).alias("jaccard"))
-    )
+    sh = _shingled(df, text_col, id_col, k, block_col)
+    return _prefix_join((sh,), threshold, block_col is not None, strict)
 
 
 def jaccard_prefix_join_ab(
@@ -1354,7 +1384,6 @@ def jaccard_prefix_join_ab(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
-    df_buckets: int | None = 1 << 16,
 ) -> DataFrame:
     """EXACT cross-corpus set-similarity join: every (A-doc, B-doc)
     pair with ``k``-shingle Jaccard ≥ ``threshold`` — the
@@ -1366,7 +1395,7 @@ def jaccard_prefix_join_ab(
     The two sides MUST order their shingles by the SAME total order
     for the prefix lemma to hold across corpora, so the frequency
     table is computed over the UNION of both token streams (bucketed
-    to ``df_buckets`` groups — fixed-size, broadcast back; see
+    to a fixed number of groups, broadcast back; see
     :func:`jaccard_prefix_join` for why the ordering is free to be
     approximate: the output is exact regardless, candidates verify
     against the full shingle sets).
@@ -1379,150 +1408,10 @@ def jaccard_prefix_join_ab(
 
     Returns (id_a, id_b, jaccard) with jaccard exact, rounded to 6.
     """
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    t = float(threshold)
-
-    def _sh(d: DataFrame) -> DataFrame:
-        s = spread(d).select(
-            F.col(id_col).alias("__id"), word_shingles(text_col, k).alias("sh")
-        )
-        # tokenize once per side — same cut as jaccard_prefix_join
-        # (each side is read by the df pass, its prefix build, and
-        # its verification join)
-        return (
-            s.filter(F.size("sh") > 0)
-            .withColumn("sz", F.size("sh"))
-            .withColumn("shh", F.transform("sh", lambda x: F.xxhash64(x)))
-            .withColumn(
-                "__hdup", F.col("sz") - F.size(F.array_distinct("shh"))
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    sh_a, sh_b = _sh(df_a), _sh(df_b)
-    ex_a = sh_a.select("__id", "sz", F.explode("sh").alias("tok"))
-    ex_b = sh_b.select("__id", "sz", F.explode("sh").alias("tok"))
-    both = ex_a.select("tok").unionByName(ex_b.select("tok"))
-    if df_buckets is None:
-        dfreq = both.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-
-        def _with_df(ex: DataFrame) -> DataFrame:
-            return ex.join(dfreq, "tok")
-    else:
-        b = int(df_buckets)
-        if b < 2:
-            raise ValueError(f"df_buckets must be >= 2, got {df_buckets}")
-        bucket = F.pmod(F.crc32(F.col("tok")), F.lit(b))
-        bfreq = (
-            both.select(bucket.alias("__b"))
-            .groupBy("__b")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-
-        def _with_df(ex: DataFrame) -> DataFrame:
-            return (
-                ex.withColumn("__b", bucket)
-                .join(F.broadcast(bfreq), "__b")
-                .drop("__b")
-            )
-
-    pref_len = (
-        F.col("sz") - F.ceil(F.lit(t) * F.col("sz")).cast("int") + F.lit(1)
+    sides = (
+        _shingled(df_a, text_col, id_col, k),
+        _shingled(df_b, text_col, id_col, k),
     )
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct(F.col("df"), F.col("tok")))),
-        lambda s: s["tok"],
-    )
-
-    def _prefix(ex: DataFrame) -> DataFrame:
-        # each side's prefix table is read once here, but the shared
-        # union df pass (bfreq) re-evaluates both sides' exploded
-        # streams; the checkpoint bounds every consumer to the
-        # materialized narrow rows
-        return (
-            _with_df(ex)
-            .groupBy("__id", "sz")
-            .agg(ordered.alias("__ord"))
-            .select(
-                "__id", "sz",
-                F.posexplode(F.slice(F.col("__ord"), 1, pref_len)).alias(
-                    "pos", "tok"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    pa, pb = _prefix(ex_a).alias("a"), _prefix(ex_b).alias("b")
-    # PPJoin positional filter — same bound as jaccard_prefix_join
-    # (both sides' positions live in the ONE shared union-frequency
-    # order, so the before/after counting argument carries over);
-    # prunes candidate rows before the distinct + verification join
-    # without changing the verified output.
-    overlap_bound = (
-        F.least(F.col("a.pos"), F.col("b.pos"))
-        + F.lit(1)
-        + F.least(
-            F.col("a.sz") - F.col("a.pos") - F.lit(1),
-            F.col("b.sz") - F.col("b.pos") - F.lit(1),
-        )
-    ).cast("double")
-    min_overlap = F.lit(t / (1.0 + t)) * (F.col("a.sz") + F.col("b.sz"))
-    cand = (
-        pa.join(pb, F.col("a.tok") == F.col("b.tok"))
-        .filter(
-            (F.col("b.sz") >= F.lit(t) * F.col("a.sz"))
-            & (F.col("a.sz") >= F.lit(t) * F.col("b.sz"))
-            # relative + absolute prune-side epsilon — same reasoning
-            # as jaccard_prefix_join
-            & (
-                overlap_bound
-                + F.lit(1e-9)
-                + F.lit(1e-12) * (F.col("a.sz") + F.col("b.sz"))
-                >= min_overlap
-            )
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
-    # hashed verification prefilter — see jaccard_prefix_join: long-
-    # array intersect bounds the Jaccard from above (collision slack
-    # min(hdup)), only survivors pay the exact string intersect
-    hl = sh_a.select(
-        F.col("__id").alias("id_a"),
-        F.col("sz").alias("__sz_l"),
-        F.col("shh").alias("__shh_l"),
-        F.col("__hdup").alias("__hd_l"),
-    )
-    hr = sh_b.select(
-        F.col("__id").alias("id_b"),
-        F.col("sz").alias("__sz_r"),
-        F.col("shh").alias("__shh_r"),
-        F.col("__hdup").alias("__hd_r"),
-    )
-    ub = (
-        F.size(F.array_intersect("__shh_l", "__shh_r"))
-        + F.least("__hd_l", "__hd_r")
-    ).cast("double")
-    szsum = (F.col("__sz_l") + F.col("__sz_r")).cast("double")
-    survivors = (
-        cand.join(hl, "id_a")
-        .join(hr, "id_b")
-        .filter(
-            F.lit(1.0 + t) * ub + F.lit(1e-9) + F.lit(1e-12) * szsum
-            >= F.lit(t) * szsum
-        )
-        .select("id_a", "id_b")
-    )
-    left = sh_a.select(F.col("__id").alias("id_a"), F.col("sh").alias("sh_l"))
-    right = sh_b.select(F.col("__id").alias("id_b"), F.col("sh").alias("sh_r"))
-    inter = F.size(F.array_intersect(F.col("sh_l"), F.col("sh_r")))
-    union = F.size("sh_l") + F.size("sh_r") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        survivors.join(left, "id_a")
-        .join(right, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= F.lit(t))
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _prefix_join(sides, threshold, False, False).select(
+        F.col("id_left").alias("id_a"), F.col("id_right").alias("id_b"), "jaccard"
     )

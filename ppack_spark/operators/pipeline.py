@@ -3226,7 +3226,6 @@ def decontaminate_fuzzy(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.8,
-    df_buckets: "int | None" = 1 << 16,
 ) -> DataFrame:
     """Whole-document fuzzy decontamination: drop every corpus
     document whose ``k``-shingle Jaccard against ANY eval/benchmark
@@ -3251,7 +3250,7 @@ def decontaminate_fuzzy(
 
     hits = jaccard_prefix_join_ab(
         corpus, eval_docs, text_col=text_col, id_col=id_col,
-        k=k, threshold=threshold, df_buckets=df_buckets,
+        k=k, threshold=threshold,
     ).select(F.col("id_a").alias(id_col)).distinct()
     return corpus.join(hits, id_col, "left_anti")
 

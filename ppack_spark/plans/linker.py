@@ -3,11 +3,11 @@ object (blocking → pairs → comparisons → pattern counts → EM →
 scoring), mirroring the end-to-end driver script scratch.R:17-139.
 
 Compare once per fit, like the reference (scratch.R:51-54, 128-134):
-one ids + gammas frame is cut per Linker (:meth:`Linker.gammas`), and
-pattern counts, scoring and clustering read it; inputs and spec are
-fixed after construction, and the frame holds no m, u or λ. Only the
-pattern-counts sufficient statistic (≤ ∏ levels rows) is collected for
-the driver-side EM.
+one ids + gammas frame per Linker sits behind a lazy checkpoint
+(:meth:`Linker.gammas`), and pattern counts, scoring and clustering
+read it; inputs and spec are fixed after construction, and the frame
+holds no m, u or λ. Only the pattern-counts sufficient statistic
+(≤ ∏ levels rows) is collected for the driver-side EM.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..blocking import extract_blocks, ordered_pairs
 from ..em import FSParams, run_em
-from ..operators.util import cut_lineage, distributed_rank
+from ..operators.util import distributed_rank
 from ..pairs import compute_pairs_dataset, sample_pair_ids_inplan
 from ..patterns import (
     collect_probabilities,
@@ -47,7 +47,7 @@ class Linker:
         self.params: FSParams | None = None
         self._gammas: DataFrame | None = None
 
-    # --- plan builders (lazy) and the one cut comparison frame -------
+    # --- plan builders (lazy) and the one checkpointed gammas frame --
     def candidate_pairs(self) -> DataFrame:
         pairs = extract_blocks(
             self.data_a,
@@ -84,11 +84,16 @@ class Linker:
         return do_comparisons(self.pairs_dataset(pair_ids), self.spec.comparator_exprs(), keep=keep)
 
     def gammas(self) -> DataFrame:
-        """:meth:`comparisons` (pair ids + one gamma per comparator) cut
-        with ``cut_lineage`` on first use and kept, so blocking,
-        rehydration and the comparators run once per Linker."""
+        """:meth:`comparisons` (pair ids + one gamma per comparator)
+        behind a lazy ``localCheckpoint``, built on first use and kept,
+        so blocking, rehydration and the comparators run once per
+        Linker. The checkpoint runs no job of its own: the first action
+        that reads the frame computes and keeps its rows, and later
+        reads hit them. No consumer joins the frame with itself (the
+        pattern-count group-by, ``score_pairs``, the edge filter), so
+        it needs no ``cut_lineage`` statistics reset."""
         if self._gammas is None:
-            self._gammas = cut_lineage(self.comparisons(keep_ids=True))
+            self._gammas = self.comparisons(keep_ids=True).localCheckpoint(eager=False)
         return self._gammas
 
     def pattern_counts(self) -> DataFrame:
@@ -218,7 +223,7 @@ class Linker:
         contract as the comparator expressions; it rides the
         comparison projection as an extra column, so no second pass
         over the inputs is ever made. That is also why this plan stays
-        lazy instead of reading :meth:`gammas`: the cut frame holds
+        lazy instead of reading :meth:`gammas`: the checkpointed frame holds
         only ids and gammas, and the truth column needs the rehydrated
         pair rows. Returns one ``'sweep'`` row per τ and one ``'best'``
         row (see :func:`evaluation_report` for the schema and boundary

@@ -820,14 +820,16 @@ def test_prefix_join_positional_filter_preserves_boundary_pairs(spark):
     assert (3, 4) not in got  # prune-bait pair (J = 1/11) absent
 
 
-def test_jaccard_prefix_join_ab_matches_brute_force(spark):
+def test_jaccard_prefix_join_ab_matches_brute_force(spark, monkeypatch):
     """The A-B prefix join must find EXACTLY the brute-force cross
-    pairs at the threshold — for every df ordering mode (the output
-    is invariant to the ordering by the prefix-filter lemma)."""
+    pairs at the threshold — on (A, B) and on (A, A), and at the
+    default and a collision-heavy 64-bucket frequency order (the
+    output is invariant to the ordering by the prefix-filter lemma)."""
     from conftest import SF_DIR
 
     from pyspark.sql import functions as F
 
+    from ppack_spark.operators import dedup
     from ppack_spark.operators.dedup import (
         jaccard_prefix_join_ab,
         jaccard_similarity,
@@ -840,29 +842,77 @@ def test_jaccard_prefix_join_ab_matches_brute_force(spark):
     sh = documents.select(
         "doc_id", word_shingles("text", 3).alias("sh")
     ).filter(F.size("sh") > 0)
-    brute = (
-        sh.alias("l")
-        .join(sh.alias("r"), F.lit(True))
-        .filter(
-            (F.col("l.doc_id") % 10 != 0) & (F.col("r.doc_id") % 10 == 0)
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"),
-            F.col("r.doc_id").alias("id_b"),
-            jaccard_similarity(F.col("l.sh"), F.col("r.sh")).alias("j_raw"),
-        )
-        # Filter on the UNROUNDED jaccard, then round — the operator's
-        # order of operations; filtering post-round would admit pairs
-        # with true J in [0.4999995, 0.5) that the operator excludes.
-        .filter(F.col("j_raw") >= 0.5)
-        .select("id_a", "id_b", F.round("j_raw", 6).alias("jaccard"))
-    )
-    expect = {tuple(r) for r in brute.collect()}
-    for buckets in (1 << 16, 64, None):
-        got = {
+
+    def brute(right_side):
+        return {
             tuple(r)
-            for r in jaccard_prefix_join_ab(
-                a, b, k=3, threshold=0.5, df_buckets=buckets
-            ).collect()
+            for r in sh.alias("l")
+            .join(sh.alias("r"), F.lit(True))
+            .filter((F.col("l.doc_id") % 10 != 0) & right_side(F.col("r.doc_id")))
+            .select(
+                F.col("l.doc_id").alias("id_a"),
+                F.col("r.doc_id").alias("id_b"),
+                jaccard_similarity(F.col("l.sh"), F.col("r.sh")).alias("j_raw"),
+            )
+            # Filter on the UNROUNDED jaccard, then round — the
+            # operator's order of operations; filtering post-round
+            # would admit pairs with true J in [0.4999995, 0.5) that
+            # the operator excludes.
+            .filter(F.col("j_raw") >= 0.5)
+            .select("id_a", "id_b", F.round("j_raw", 6).alias("jaccard"))
+            .collect()
         }
-        assert got == expect, f"df_buckets={buckets}"
+
+    cases = {
+        "A-B": (b, brute(lambda i: i % 10 == 0)),
+        "A-A": (a, brute(lambda i: i % 10 != 0)),
+    }
+    for buckets in (1 << 16, 64):
+        monkeypatch.setattr(dedup, "_DF_BUCKETS", buckets)
+        for name, (right, expect) in cases.items():
+            got = {
+                tuple(r)
+                for r in jaccard_prefix_join_ab(a, right, k=3, threshold=0.5).collect()
+            }
+            assert got == expect, f"{name}, _DF_BUCKETS={buckets}"
+
+
+def test_prefix_self_join_is_the_ab_join_on_one_input(spark):
+    """The self-join is the R-S join with R = S restricted to
+    id_left < id_right: same pairs, same Jaccard values."""
+    from conftest import SF_DIR
+
+    from pyspark.sql import functions as F
+
+    from ppack_spark.operators.dedup import jaccard_prefix_join, jaccard_prefix_join_ab
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    got = {tuple(r) for r in jaccard_prefix_join(d, k=3, threshold=0.5).collect()}
+    ab = jaccard_prefix_join_ab(d, d, k=3, threshold=0.5)
+    want = {tuple(r) for r in ab.filter(F.col("id_a") < F.col("id_b")).collect()}
+    assert got == want and got
+
+
+def test_lsh_self_join_is_the_ab_join_on_one_input(spark):
+    """The two LSH twins keep separate joins; pin them against drift:
+    the A-B candidates of (d, d) over one signature table, restricted
+    to id_left < id_right, are exactly the self-join candidates."""
+    from conftest import SF_DIR
+
+    from pyspark.sql import functions as F
+
+    from ppack_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_ab,
+        minhash_signatures,
+    )
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    sig = minhash_signatures(d)
+    got = {tuple(r) for r in minhash_lsh_pairs(d, signatures=sig).collect()}
+    ab = minhash_lsh_pairs_ab(d, d, signatures_left=sig, signatures_right=sig)
+    want = {
+        tuple(r)
+        for r in ab.filter(F.col("id_left") < F.col("id_right")).collect()
+    }
+    assert got == want and got

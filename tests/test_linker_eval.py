@@ -234,7 +234,7 @@ def test_ab_link_compares_once(spark, tables, monkeypatch):
 
 
 def test_gammas_frame_holds_no_parameters(spark, tables):
-    """Replacing ``params`` after the frame is cut scores with the new
+    """Replacing ``params`` after the frame is built scores with the new
     parameters, exactly as the lazy comparison plan does."""
     linker = pp.Linker(spark, tables["customer"], None, _spec())
     linker.params = _hand_params(0.5)
@@ -253,6 +253,24 @@ def test_pattern_counts_read_the_frame(spark, tables):
     names = [c.name for c in linker.spec.comparisons]
     lazy = pattern_counts(linker.comparisons(keep_ids=False), names)
     assert sorted(linker.pattern_counts().collect()) == sorted(lazy.collect())
+
+
+def test_gammas_checkpoint_costs_no_job_of_its_own(spark, tables):
+    """The gammas frame is materialized by the first action that reads
+    it: building it on a fresh Linker and collecting its pattern counts
+    runs no more jobs than collecting the lazy pattern counts once (an
+    eager cut runs one more)."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(action) -> int:
+        first = sched.nextJobId()
+        action()
+        return sched.nextJobId() - first
+
+    linker = pp.Linker(spark, tables["customer"], None, _spec())
+    names = [c.name for c in linker.spec.comparisons]
+    lazy = jobs(lambda: pattern_counts(linker.comparisons(keep_ids=False), names).collect())
+    assert jobs(lambda: linker.pattern_counts().collect()) <= lazy
 
 
 # ---------------------------------------------------------- eval layer

@@ -2,6 +2,12 @@
 (min-of-N in THIS process) and write ``plans/r14/<gate>_<tag>.txt``
 with the ``explain("formatted")`` output.
 
+Each gate prints one line: the min time, then the fastest sample's
+Spark job count (delta of the scheduler's next job id, construction
+included) and plan fingerprint (sha1 of the optimized plan with the
+``#<n>`` expression ids stripped), so two checkouts' lines show at a
+glance whether a change kept the plan and the jobs.
+
 Usage::
 
     python tools/profile_gate.py [--tag before|after] [--iters 2] g1 g2 ...
@@ -15,7 +21,9 @@ canonical numbers stay in bench.py's artifacts.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
+import re
 import sys
 import time
 
@@ -38,6 +46,7 @@ def main() -> None:
 
     spark = get_spark("profile_gate")
     spark.sparkContext.setLogLevel("ERROR")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
     qs = entry.queries()
     out_dir = os.path.join(REPO, "plans", args.round)
     os.makedirs(out_dir, exist_ok=True)
@@ -61,11 +70,21 @@ def main() -> None:
             # internal actions (iterative loops, trainer collects) do
             # real work at construction, and bench.py times
             # fn(spark, sf_dir) + noop together
+            job0 = int(sched.nextJobId())
             t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.monotonic() - t0)
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            samples.append(
+                (time.monotonic() - t0, int(sched.nextJobId()) - job0, df)
+            )
         spark.sparkContext.setJobDescription(None)
-        print(f"{name}: min {min(samples):.3f}s  samples {[round(s,3) for s in samples]}")
+        best, jobs, df = min(samples, key=lambda s: s[0])
+        plan = re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+        fp = hashlib.sha1(plan.encode()).hexdigest()[:12]
+        print(
+            f"{name}: min {best:.3f}s  jobs {jobs}  plan {fp}  "
+            f"samples {[round(s[0], 3) for s in samples]}"
+        )
 
 
 if __name__ == "__main__":
