@@ -22,6 +22,27 @@
   multiplicatively — the FAISS-IVFPQ architecture, recall-gated in
   tests/test_ann.py.
 
+Each trained index has two twins, and both stay for a measured reason
+(sf0.1 ``embeddings``, 20 queries, recall@10 against
+:func:`cosine_topk`; ``tools/ann_twins.py`` reruns the measurement):
+
+* :func:`ivf_index` (Spark-ML k-means) / :func:`pq_train` (numpy on a
+  driver sample) and the scan query paths :func:`cosine_topk_pq` /
+  :func:`cosine_topk_ivfpq` beat their ``_fixed`` twins on build+query
+  time and on recall, by more than the twins' IQR and 0.02; and only
+  :func:`pq_train` serves ``m*k > 4 * LITERAL_ASSIGN_MAX_K``.
+* :func:`ivf_index_fixed` / :func:`pq_train_fixed` and the ``_fixed``
+  query paths are md5-seeded, rounded-Lloyd and literal-argmin, so a
+  SQL oracle replays them bit-for-bit: they are the only hash-gated
+  rows of the trained-index family.
+
+The twins differ in trainers, encoders and ADC scorers only. Every
+query tail after them is written once: :func:`_probes` (query → its
+nearest lists), :func:`_rerank` (ADC shortlist → exact-cosine
+re-rank, the filter-then-verify shape of compressed-index search) and
+:func:`_topk` (the per-query ``row_number`` cut every search path
+ends with).
+
 At 100 TB the corpus side streams through executors partition-by-
 partition while the query side is broadcast; for corpus×corpus
 problems use the LSH bucketing so the join is on bucket ids, never a
@@ -30,7 +51,9 @@ cross product.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .util import spread
@@ -77,6 +100,63 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _topk(df: DataFrame, k: int, score: str, tie: str, rank: str = "rank") -> DataFrame:
+    """The per-query cut: number each ``query_id``'s rows by
+    (``score`` desc, ``tie`` asc) into ``rank`` and keep ranks ≤ ``k``.
+    The id tie-break makes every top-k, shortlist and probe set
+    deterministic and oracle-replayable (the SQL side is the same
+    ``row_number``)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _probes(
+    queries: DataFrame, cent_df: DataFrame, n_probe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Query → its ``n_probe`` nearest centroids by cosine
+    (centroid-id tie-break): a broadcast cross join on the tiny
+    centroid table. Returns (query_id, __qv, centroid)."""
+    qc = (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+        .crossJoin(F.broadcast(cent_df))
+        .withColumn("__cd", cosine(F.col("__qv"), F.col("centroid_vec")))
+    )
+    return _topk(qc, n_probe, "__cd", "centroid", "__cr").select(
+        "query_id", "__qv", "centroid"
+    )
+
+
+def _rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Second stage of every PQ path: cut each query's ADC candidates
+    (query_id, __nid, adc_score) to its ``shortlist`` best, fetch the
+    true vectors of the shortlist only — O(queries · shortlist)
+    vectors, never the corpus — and return the exact-cosine top-k
+    (query_id, neighbor_id, cos_sim, rank)."""
+    short = _topk(cand, shortlist, "adc_score", "__nid", "__r").select(
+        "query_id", "__nid"
+    )
+    cvec = corpus.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__cv"))
+    qvec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+    rer = (
+        short.join(cvec, "__nid")
+        .join(F.broadcast(qvec), "query_id")
+        .select(
+            "query_id",
+            F.col("__nid").alias("neighbor_id"),
+            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
+        )
+    )
+    return _topk(rer, k, "cos_sim", "neighbor_id")
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -91,8 +171,6 @@ def cosine_topk(
     excluded. Ranking uses the rounded similarity with id tie-break so
     results are deterministic and oracle-comparable across engines.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
@@ -108,13 +186,7 @@ def cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k, "cos_sim", "neighbor_id")
 
 
 def embedding_near_dup_pairs(
@@ -270,25 +342,71 @@ def assign_to_centroids(
     base: DataFrame,
     cents: dict[int, list[float]],
     id_col: str,
-    use_literal: bool | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment (argmin squared-L2, centroid-id
-    tie-break) against a driver-side centroid dict, routed by k: up
-    to ``LITERAL_ASSIGN_MAX_K`` centroids the distances unroll as
-    plan literals — a ZERO-SHUFFLE codegen projection (argmin via
-    array_min over (d2, centroid) structs, whose lexicographic
-    ordering IS the (d2 asc, centroid asc) tie-break the SQL oracle's
-    row_number replays); above, the broadcast-join + map-side-combined
-    min path (same zip_with+aggregate fold, so distances are
-    bit-identical either way). ``base`` carries (id, ``__v``
-    array<double>); returns (id, __v, centroid)."""
-    if use_literal is None:
-        use_literal = len(cents) <= LITERAL_ASSIGN_MAX_K
-    if not use_literal:
+    tie-break) against a driver-side centroid dict, routed by
+    ``len(cents)``: up to ``LITERAL_ASSIGN_MAX_K`` centroids the
+    distances are a plan literal — a ZERO-SHUFFLE codegen projection
+    (argmin via array_min over (d2, centroid) structs, whose
+    lexicographic ordering IS the (d2 asc, centroid asc) tie-break the
+    SQL oracle's row_number replays); above, the broadcast-join +
+    map-side-combined min path (same zip_with+aggregate fold, so
+    distances are bit-identical either way). ``base`` carries (id,
+    ``__v`` array<double>); returns (id, __v, centroid)."""
+    if len(cents) > LITERAL_ASSIGN_MAX_K:
         return _assign_broadcast(base, cents, id_col)
     return base.withColumn(
         "centroid", nearest_centroid_col(cents, F.col("__v"))
     ).select(id_col, "__v", "centroid")
+
+
+def _with_centroid(
+    df: DataFrame,
+    cents: dict[int, list[float]],
+    id_col: str,
+    vec_col: str,
+    base: DataFrame | None = None,
+) -> DataFrame:
+    """``df`` plus its nearest-centroid ``centroid`` column, routed
+    like :func:`assign_to_centroids`: up to ``LITERAL_ASSIGN_MAX_K``
+    centroids the argmin is stamped in place as a projection (no
+    staging frame, no re-attach join); above, the broadcast
+    assignment of ``base`` — ``df``'s (id, ``__v``) frame, built here
+    unless the caller already holds it materialized — joins back by
+    id."""
+    vec = F.col(vec_col).cast("array<double>")
+    if len(cents) <= LITERAL_ASSIGN_MAX_K:
+        return df.withColumn("centroid", nearest_centroid_col(cents, vec))
+    if base is None:
+        base = df.select(F.col(id_col), vec.alias("__v"))
+    return (
+        assign_to_centroids(base, cents, id_col)
+        .join(df, id_col)
+        .select(*df.columns, "centroid")
+    )
+
+
+def _nearest(vec: Column, rows: list) -> Column:
+    """Position of the vector in ``rows`` nearest to ``vec`` by
+    squared L2, the lower position on ties: ``rows`` enters the plan
+    as ONE nested-array literal scanned by a ``transform`` lambda, and
+    the argmin is the array_min of (d², position) structs. The
+    per-element fold is zip_with + left-to-right aggregate, the order
+    the SQL oracle replays."""
+    cb = F.lit([[float(x) for x in r] for r in rows])
+    return F.array_min(
+        F.transform(
+            cb,
+            lambda cvec, i: F.struct(
+                F.aggregate(
+                    F.zip_with(vec, cvec, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d"),
+                i.alias("c"),
+            ),
+        )
+    )["c"]
 
 
 def nearest_centroid_col(cents: dict[int, list[float]], vec) -> "F.Column":
@@ -308,20 +426,7 @@ def nearest_centroid_col(cents: dict[int, list[float]], vec) -> "F.Column":
     argmin — are bit-identical to the unrolled form and to the SQL
     oracle's replay."""
     cids = sorted(cents)
-    cb = F.lit([[float(x) for x in cents[c]] for c in cids])
-    idx = F.array_min(
-        F.transform(
-            cb,
-            lambda cvec, i: F.struct(
-                F.aggregate(
-                    F.zip_with(vec, cvec, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                i.alias("c"),
-            ),
-        )
-    )["c"]
+    idx = _nearest(vec, [cents[c] for c in cids])
     if cids == list(range(len(cids))):
         return idx
     # non-contiguous centroid ids: positional order == sorted-cid
@@ -367,20 +472,22 @@ def ivf_index_fixed(
     :func:`ivf_index`. Scale shape: each round is one broadcast
     nearest-centroid map pass + one partial-aggregated groupBy of
     n_centroids×dims cells; the corpus never shuffles by centroid
-    until a consumer asks it to. Assignment routes by k: up to
-    ``LITERAL_ASSIGN_MAX_K`` lists it is the zero-shuffle literal
-    projection; above, the broadcast-join + map-side-combined min_by
-    path (same fold, bit-identical distances — agreement is
-    regression-tested across the threshold).
+    until a consumer asks it to. Assignment routes by the number of
+    centroids (:func:`assign_to_centroids` in the Lloyd rounds,
+    :func:`_with_centroid` for the returned lists, which
+    :func:`ivf_index_append` shares): up to ``LITERAL_ASSIGN_MAX_K``
+    lists it is the zero-shuffle literal projection; above, the
+    broadcast-join + map-side-combined min_by path (same fold,
+    bit-identical distances — agreement is regression-tested across
+    the threshold).
     """
     if n_centroids < 1 or iters < 0:
         raise ValueError(f"need n_centroids >= 1, iters >= 0: {n_centroids}, {iters}")
     spark = corpus.sparkSession
-    use_literal = n_centroids <= LITERAL_ASSIGN_MAX_K
     # materialize (id, cast vector) once: the seed job, every Lloyd
-    # round, and the final assignment all re-read this narrow frame —
-    # without the cut each of those jobs re-scans the source and
-    # re-casts the vectors (iters+2 evaluations of the same subtree)
+    # round, and (above LITERAL_ASSIGN_MAX_K lists) the final broadcast
+    # assignment all re-read this narrow frame — without the cut each
+    # of those jobs re-scans the source and re-casts the vectors
     base = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     ).localCheckpoint(eager=False)
@@ -396,19 +503,9 @@ def ivf_index_fixed(
         raise ValueError(
             "ivf_index_fixed: cannot seed a quantizer from an empty corpus"
         )
-    cent_df = spark.createDataFrame(
-        [(i, list(r["__v"])) for i, r in enumerate(seed_rows)],
-        "centroid int, centroid_vec array<double>",
-    )
-
-    def _assign(cents: dict[int, list[float]]) -> DataFrame:
-        # shared with ivf_index_append — the k-routed (literal vs
-        # broadcast) argmin projection; see assign_to_centroids
-        return assign_to_centroids(base, cents, id_col, use_literal)
-
     prev = {i: list(r["__v"]) for i, r in enumerate(seed_rows)}
     for _ in range(iters):
-        asg = _assign(prev)
+        asg = assign_to_centroids(base, prev, id_col)
         means = asg.groupBy("centroid").agg(
             *[
                 F.round(F.avg(F.col("__v").getItem(i)), round_digits).alias(f"__m{i}")
@@ -436,21 +533,7 @@ def ivf_index_fixed(
     cent_df = spark.createDataFrame(
         sorted(prev.items()), "centroid int, centroid_vec array<double>"
     )
-    if use_literal:
-        # the assignment is a pure projection — stamp it directly on
-        # the corpus instead of joining the (id, centroid) staging
-        # frame back (same cast, same fold: bit-identical centroid)
-        assigned = corpus.withColumn(
-            "centroid",
-            nearest_centroid_col(prev, F.col(vec_col).cast("array<double>")),
-        )
-    else:
-        assigned = (
-            _assign(prev)
-            .join(corpus, id_col)
-            .select(*corpus.columns, "centroid")
-        )
-    return assigned, cent_df
+    return _with_centroid(corpus, prev, id_col, vec_col, base), cent_df
 
 
 def ivf_index_append(
@@ -468,9 +551,9 @@ def ivf_index_append(
     100 TB the retrain is O(iters × corpus) full scans and the append
     is O(delta).
 
-    The assignment is the SAME k-routed argmin projection the trainer
-    uses (:func:`assign_to_centroids` — identical fp fold, identical
-    tie-break), so an appended index is bit-identical to what the
+    The assignment is the SAME k-routed argmin stamp the trainer's
+    final pass uses (:func:`_with_centroid` — identical fp fold,
+    identical tie-break), so an appended index is bit-identical to what the
     trainer would have assigned for those vectors against the same
     centroids, and a SQL oracle can replay it. The quantizer does NOT
     adapt: after appending a distribution-shifted delta comparable in
@@ -488,23 +571,10 @@ def ivf_index_append(
     }
     if not cents:
         raise ValueError("ivf_index_append: index has no centroids")
-    if len(cents) <= LITERAL_ASSIGN_MAX_K:
-        # zero-shuffle: the delta assignment is a projection, so stamp
-        # it in place (no staging frame, no re-attach join)
-        newly = new_vectors.withColumn(
-            "centroid",
-            nearest_centroid_col(cents, F.col(vec_col).cast("array<double>")),
-        )
-    else:
-        base = new_vectors.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-        )
-        newly = (
-            assign_to_centroids(base, cents, id_col)
-            .join(new_vectors, id_col)
-            .select(*new_vectors.columns, "centroid")
-        )
-    return assigned.unionByName(newly), cent_df
+    return (
+        assigned.unionByName(_with_centroid(new_vectors, cents, id_col, vec_col)),
+        cent_df,
+    )
 
 
 def cosine_topk_ivf(
@@ -530,8 +600,6 @@ def cosine_topk_ivf(
     :func:`ivf_index` or :func:`ivf_index_fixed` — build once, serve
     many query batches (and pick the deterministic trainer when the
     result must replay in a SQL oracle)."""
-    from pyspark.sql import Window
-
     assigned, cent_df = (
         index
         if index is not None
@@ -540,20 +608,9 @@ def cosine_topk_ivf(
     cb = assigned.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), "centroid"
     )
-    # query → its n_probe nearest centroids (tiny broadcast cross join)
-    qc = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("__cd", cosine(F.col("__qv"), F.col("centroid_vec")))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("__cd"), F.asc("centroid"))
-    probes = (
-        qc.withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= n_probe)
-        .select("query_id", "__qv", "centroid")
-    )
     scored = (
-        probes.join(cb, on="centroid")
+        _probes(queries, cent_df, n_probe, id_col, vec_col)
+        .join(cb, on="centroid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
@@ -561,8 +618,7 @@ def cosine_topk_ivf(
             F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cos_sim", "neighbor_id")
 
 
 def cosine_topk_lsh(
@@ -588,8 +644,6 @@ def cosine_topk_lsh(
     Recall@k vs the exact baseline is asserted in tests/test_ann.py.
     """
     from itertools import combinations
-
-    from pyspark.sql import Window
 
     qb = hyperplane_lsh_buckets(queries, dims, n_planes, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "bucket"
@@ -620,8 +674,7 @@ def cosine_topk_lsh(
         # before ranking so row_number sees each candidate once
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cos_sim", "neighbor_id")
 
 
 def semantic_dedup_corpus(
@@ -681,8 +734,6 @@ def semantic_dedup_corpus(
     from .cluster import connected_components
 
     if clusters is None and n_planes is None:
-        import math
-
         n = df.select(id_col).count()
         n_planes = max(
             4,
@@ -860,6 +911,18 @@ def pq_encode(
     return corpus.select(id_col, _encode(F.col(vec_col)).alias("pq_code"))
 
 
+def _numpy_luts(qrows: list, codebooks, vec_col: str):
+    """The scan paths' per-query ADC lookup tables, ``LUT[q, s, c] =
+    q_sub(s) · centroid(s, c)`` over the L2-normalized query rows, as
+    one numpy einsum: shape ``(queries, m, k)``."""
+    import numpy as np
+
+    Q = np.asarray([r[vec_col] for r in qrows], dtype=np.float64)
+    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    mm, _, dsub = codebooks.shape
+    return np.einsum("qsd,scd->qsc", Q.reshape(len(Q), mm, dsub), codebooks)
+
+
 def cosine_topk_pq(
     queries: DataFrame,
     corpus: DataFrame,
@@ -892,12 +955,10 @@ def cosine_topk_pq(
 
     ``exclude_self`` (default True) drops a candidate whose id equals
     the query id INSIDE the ADC scan — before it can consume a
-    shortlist slot. Set False when query and corpus ids come from
-    different namespaces: there an id collision is a legitimate
-    neighbor, and the old post-shortlist filter would silently discard
-    it."""
+    shortlist slot, so no self-hit reaches the re-rank. Set False when
+    query and corpus ids come from different namespaces: there an id
+    collision is a legitimate neighbor."""
     import numpy as np
-    from pyspark.sql import Window
 
     codebooks = pq_train(corpus, m=m, k=n_centroids, vec_col=vec_col, seed=seed)
     codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col).filter(
@@ -906,13 +967,8 @@ def cosine_topk_pq(
 
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.asarray([r[id_col] for r in qrows])
-    Q = np.asarray([r[vec_col] for r in qrows], dtype=np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    mm, kk, dsub = codebooks.shape
-    # LUT[q, s, c] = q_sub(s) · centroid(s, c)
-    lut = np.einsum(
-        "qsd,scd->qsc", Q.reshape(len(Q), mm, dsub), codebooks
-    )
+    lut = _numpy_luts(qrows, codebooks, vec_col)
+    mm = codebooks.shape[0]
     shortlist = shortlist_mult * k
 
     def _scan(batches):
@@ -964,26 +1020,8 @@ def cosine_topk_pq(
         f" __nid {corpus.schema[id_col].dataType.simpleString()},"
         " adc_score double",
     )
-    # global shortlist per query (merges the per-partition shortlists)
-    ws = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("__nid"))
-    short = (
-        cand.withColumn("__r", F.row_number().over(ws))
-        .filter(F.col("__r") <= shortlist)
-        .select("query_id", "__nid")
-    )
-    # exact re-rank: fetch true vectors for the shortlist only
-    cvec = corpus.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__cv"))
-    qvec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    rer = short.join(cvec, "__nid").join(F.broadcast(qvec), "query_id")
-    if exclude_self:  # belt-and-braces; the scan already masked these
-        rer = rer.filter(F.col("query_id") != F.col("__nid"))
-    rer = rer.select(
-        "query_id",
-        F.col("__nid").alias("neighbor_id"),
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return rer.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    # the global shortlist merges the per-partition shortlists
+    return _rerank(cand, queries, corpus, k, shortlist, id_col, vec_col)
 
 
 def cosine_topk_ivfpq(
@@ -1016,7 +1054,6 @@ def cosine_topk_ivfpq(
     self-hits are dropped BEFORE the shortlist cut (set False for
     cross-namespace query/corpus ids)."""
     import numpy as np
-    from pyspark.sql import Window
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -1029,25 +1066,9 @@ def cosine_topk_ivfpq(
     )
 
     qrows = queries.select(id_col, vec_col).collect()
-    qids = [r[id_col] for r in qrows]
-    Q = np.asarray([r[vec_col] for r in qrows], dtype=np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    mm, kk, dsub = codebooks.shape
-    lut = np.einsum("qsd,scd->qsc", Q.reshape(len(Q), mm, dsub), codebooks)
-    qindex = {qid: i for i, qid in enumerate(qids)}
-
-    # query -> n_probe nearest centroids (tiny broadcast cross join)
-    qc = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("__cd", cosine(F.col("__qv"), F.col("centroid_vec")))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("__cd"), F.asc("centroid"))
-    probes = (
-        qc.withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= n_probe)
-        .select("query_id", "centroid")
-    )
+    lut = _numpy_luts(qrows, codebooks, vec_col)
+    mm = codebooks.shape[0]
+    qindex = {r[id_col]: i for i, r in enumerate(qrows)}
 
     # no annotations: PEP-563 stringified hints break pandas_udf
     # inference under `from __future__ import annotations`
@@ -1064,7 +1085,7 @@ def cosine_topk_ivfpq(
             scores += lut[qi, s, C[:, s]]
         return pd.Series(scores)
 
-    cand = probes.join(codes, "centroid")
+    cand = _probes(queries, cent_df, n_probe, id_col, vec_col).join(codes, "centroid")
     if exclude_self:
         # before the shortlist window — a self-hit must not take a slot
         cand = cand.filter(F.col("query_id") != F.col(id_col))
@@ -1073,25 +1094,7 @@ def cosine_topk_ivfpq(
         F.col(id_col).alias("__nid"),
         _adc(F.col("query_id"), F.col("pq_code")).alias("adc_score"),
     )
-    shortlist = shortlist_mult * k
-    ws = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("__nid"))
-    short = (
-        cand.withColumn("__r", F.row_number().over(ws))
-        .filter(F.col("__r") <= shortlist)
-        .select("query_id", "__nid")
-    )
-    cvec = corpus.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__cv"))
-    qvec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    rer = short.join(cvec, "__nid").join(F.broadcast(qvec), "query_id")
-    if exclude_self:
-        rer = rer.filter(F.col("query_id") != F.col("__nid"))
-    rer = rer.select(
-        "query_id",
-        F.col("__nid").alias("neighbor_id"),
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return rer.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rerank(cand, queries, corpus, k, shortlist_mult * k, id_col, vec_col)
 
 
 def _pq_encode_cols(cents, m: int, dsub: int, vec: str = "__nv") -> list:
@@ -1101,26 +1104,57 @@ def _pq_encode_cols(cents, m: int, dsub: int, vec: str = "__nv") -> list:
     nearest_centroid_col on why this beats k unrolled struct subtrees
     (identical codes, ~7x less Catalyst/codegen work). Shared by the
     trainer's Lloyd rounds and both fixed serve paths."""
-    def _argmin(sub):
-        # closure factory: the transform lambda must take exactly
-        # (element, index) — PySpark infers HOF arity from the
-        # signature, so `sub` binds via closure, not a default arg
-        return lambda cvec, i: F.struct(
-            F.aggregate(
-                F.zip_with(sub, cvec, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            i.alias("c"),
-        )
+    return [
+        _nearest(F.slice(vec, s * dsub + 1, dsub), cents[s]).alias(f"__c{s}")
+        for s in range(m)
+    ]
 
-    cols = []
-    for s in range(m):
-        sub = F.slice(vec, s * dsub + 1, dsub)
-        cb = F.lit([[float(x) for x in cvec] for cvec in cents[s]])
-        code = F.array_min(F.transform(cb, _argmin(sub)))["c"]
-        cols.append(code.alias(f"__c{s}"))
-    return cols
+
+def _unit_vectors(df: DataFrame, id_col: str, vec_col: str, dims: int) -> DataFrame:
+    """(__nid, __nv): the ``dims``-long vectors of ``df`` cast to
+    double and L2-normalized via the left-to-right ``aggregate`` fold
+    (NOT numpy's pairwise summation — both engines fold identically,
+    so the normalized doubles are bit-equal to the oracle's). NULL and
+    wrong-dimension vectors are dropped."""
+    base = df.select(
+        F.col(id_col).alias("__nid"),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+    ).filter(F.col("__v").isNotNull() & (F.size("__v") == dims))
+    nrm = l2_norm(F.col("__v"))
+    return base.select(
+        "__nid",
+        F.transform(
+            F.col("__v"), lambda x: x / F.greatest(nrm, F.lit(1e-12))
+        ).alias("__nv"),
+    )
+
+
+def _folded_luts(qrows: list, cents: list, dsub: int, vec_col: str) -> list:
+    """The fixed paths' per-query ADC lookup tables, ``lut[s][c] =
+    q_sub(s) · centroid(s, c)`` over the L2-normalized query, in
+    PURE-PYTHON left-to-right folds (bit-equal to the oracle's
+    ``list_reduce`` — NOT numpy dot products). One ``[m][k]`` table
+    per row of ``qrows``, in order."""
+    luts = []
+    for r in qrows:
+        v = [float(x) for x in r[vec_col]]
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        n = math.sqrt(acc)
+        n = n if n > 1e-12 else 1e-12
+        nv = [x / n for x in v]
+        lut_q = []
+        for s, codebook in enumerate(cents):
+            row = []
+            for cvec in codebook:
+                t = 0.0
+                for i in range(dsub):
+                    t += nv[s * dsub + i] * cvec[i]
+                row.append(t)
+            lut_q.append(row)
+        luts.append(lut_q)
+    return luts
 
 
 def pq_train_fixed(
@@ -1167,39 +1201,24 @@ def pq_train_fixed(
             f"{4 * LITERAL_ASSIGN_MAX_K}, got {m * k}; use pq_train"
         )
     dsub = dims // m
-    base = (
-        corpus.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .filter(F.col("__v").isNotNull() & (F.size("__v") == dims))
-    )
-    nrm = l2_norm(F.col("__v"))
     # normalize once: the seed job and every Lloyd round re-read this
     # frame; without the cut each job re-scans the source and re-runs
     # the cast + normalization folds (iters+1 evaluations)
-    base = base.select(
-        "__id",
-        F.transform(
-            F.col("__v"), lambda x: x / F.greatest(nrm, F.lit(1e-12))
-        ).alias("__nv"),
-    ).localCheckpoint(eager=False)
+    base = _unit_vectors(corpus, id_col, vec_col, dims).localCheckpoint(eager=False)
 
     # all m subspace seed draws in ONE windowed job (rank-pruned
     # top-k per subspace hash ordering — identical selection to m
     # separate orderBy().limit(k) passes, which cost m Spark jobs)
-    from pyspark.sql import Window
-
     hashes = F.array(
         *[
-            F.md5(F.concat(F.col("__id").cast("string"), F.lit(f":pqseed:{s}")))
+            F.md5(F.concat(F.col("__nid").cast("string"), F.lit(f":pqseed:{s}")))
             for s in range(m)
         ]
     )
     exploded = base.select(
-        "__id", "__nv", F.posexplode(hashes).alias("__s", "__h")
+        "__nid", "__nv", F.posexplode(hashes).alias("__s", "__h")
     )
-    wseed = Window.partitionBy("__s").orderBy("__h", "__id")
+    wseed = Window.partitionBy("__s").orderBy("__h", "__nid")
     seed_rows = (
         exploded.withColumn("__r", F.row_number().over(wseed))
         .filter(F.col("__r") <= k)
@@ -1223,11 +1242,8 @@ def pq_train_fixed(
         # pq_train's replace=True draw)
         cents[s] = [seeds[i % len(seeds)] for i in range(k)]
 
-    def _code_cols() -> list[Column]:
-        return _pq_encode_cols(cents, m, dsub)
-
     for _ in range(iters):
-        asg = base.select("__nv", *_code_cols())
+        asg = base.select("__nv", *_pq_encode_cols(cents, m, dsub))
         # carry each subspace's OWN slice through the explode: the
         # update only reads dims/m of the vector per (s, code) group,
         # so averaging all `dims` positions (and shuffling the full
@@ -1303,8 +1319,6 @@ def cosine_topk_pq_fixed(
     path; for the 100 TB regime keep :func:`cosine_topk_pq` (codes
     stay m BYTES, per-partition shortlists bound the window input).
     """
-    import math
-
     # Collect queries BEFORE training: an empty query set should not pay
     # for (or double-train) codebooks just to return an empty result.
     qrows = queries.select(id_col, vec_col).collect()
@@ -1334,53 +1348,16 @@ def cosine_topk_pq_fixed(
     dsub = dims // m
     cents = [[list(map(float, c)) for c in codebooks[s]] for s in range(m)]
 
-    base = (
-        corpus.select(
-            F.col(id_col).alias("__nid"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .filter(F.col("__v").isNotNull() & (F.size("__v") == dims))
-    )
-    nrm = l2_norm(F.col("__v"))
-    base = base.select(
-        "__nid",
-        F.transform(
-            F.col("__v"), lambda x: x / F.greatest(nrm, F.lit(1e-12))
-        ).alias("__nv"),
-    )
     # cut: the per-query ADC explode below references every __c{s}
     # once per query — project collapse would inline the encode tree
     # into each of those references; after the cut the scoring plans
     # over a narrow (id, m codes) leaf
-    codes = base.select(
+    codes = _unit_vectors(corpus, id_col, vec_col, dims).select(
         "__nid", *_pq_encode_cols(cents, m, dsub)
     ).localCheckpoint(eager=False)
 
-    # driver-side LUTs in pure-Python folds (left-to-right, like the
-    # oracle's list_reduce — NOT numpy dot products); qrows collected
-    # above, before codebook training
-    luts = []
-    for r in qrows:
-        v = [float(x) for x in r[vec_col]]
-        acc = 0.0
-        for x in v:
-            acc += x * x
-        n = math.sqrt(acc)
-        n = n if n > 1e-12 else 1e-12
-        nv = [x / n for x in v]
-        lut_q = []
-        for s in range(m):
-            row = []
-            for cvec in cents[s]:
-                t = 0.0
-                for i in range(dsub):
-                    t += nv[s * dsub + i] * cvec[i]
-                row.append(t)
-            lut_q.append(row)
-        luts.append((r[id_col], lut_q))
-
     score_structs = []
-    for qid, lut_q in luts:
+    for r, lut_q in zip(qrows, _folded_luts(qrows, cents, dsub, vec_col)):
         terms = [
             F.element_at(F.lit([float(x) for x in lut_q[s]]), F.col(f"__c{s}") + 1)
             for s in range(m)
@@ -1389,42 +1366,14 @@ def cosine_topk_pq_fixed(
         for t in terms[1:]:
             score = score + t
         score_structs.append(
-            F.struct(F.lit(qid).alias("query_id"), score.alias("adc_score"))
+            F.struct(F.lit(r[id_col]).alias("query_id"), score.alias("adc_score"))
         )
     long = codes.select(
         "__nid", F.explode(F.array(*score_structs)).alias("qs")
     ).select(F.col("qs.query_id"), "__nid", F.col("qs.adc_score"))
     if exclude_self:
         long = long.filter(F.col("query_id") != F.col("__nid"))
-
-    from pyspark.sql import Window
-
-    shortlist = shortlist_mult * k
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("__nid")
-    )
-    short = (
-        long.withColumn("__r", F.row_number().over(ws))
-        .filter(F.col("__r") <= shortlist)
-        .select("query_id", "__nid")
-    )
-    cvec = corpus.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__cv"))
-    qvec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    rer = (
-        short.join(cvec, "__nid")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            F.col("__nid").alias("neighbor_id"),
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return rer.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rerank(long, queries, corpus, k, shortlist_mult * k, id_col, vec_col)
 
 
 def cosine_topk_ivfpq_fixed(
@@ -1453,10 +1402,6 @@ def cosine_topk_ivfpq_fixed(
     (m-BYTE codes, pandas-UDF ADC); this variant's per-subspace join
     columns cost m extra small joins — gate-scale economics.
     """
-    import math
-
-    from pyspark.sql import Window
-
     spark = corpus.sparkSession
     assigned, cent_df = ivf_index_fixed(
         corpus, dims=dims, n_centroids=n_centroids, iters=iters,
@@ -1469,70 +1414,29 @@ def cosine_topk_ivfpq_fixed(
     dsub = dims // m
     cents = [[list(map(float, c)) for c in codebooks[s]] for s in range(m)]
 
-    base = (
-        corpus.select(
-            F.col(id_col).alias("__nid"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .filter(F.col("__v").isNotNull() & (F.size("__v") == dims))
-    )
-    nrm = l2_norm(F.col("__v"))
-    base = base.select(
-        "__nid",
-        F.transform(
-            F.col("__v"), lambda x: x / F.greatest(nrm, F.lit(1e-12))
-        ).alias("__nv"),
-    )
     # cut the plan here: without a boundary the encode trees re-appear
     # under every one of the m ADC join stages below — AQE re-plans
     # each stage over the whole duplicated tree and Catalyst analysis
     # dominates the query (measured 105 s on a 2 000-row corpus).
     # After the cut the code table is a narrow (id, m codes, centroid)
     # leaf the join pipeline plans over in milliseconds.
-    codes = base.select("__nid", *_pq_encode_cols(cents, m, dsub)).join(
+    codes = _unit_vectors(corpus, id_col, vec_col, dims).select(
+        "__nid", *_pq_encode_cols(cents, m, dsub)
+    ).join(
         assigned.select(F.col(id_col).alias("__nid"), "centroid"), "__nid"
     ).localCheckpoint(eager=False)
 
-    # query -> n_probe nearest centroids (broadcast cross join on the
-    # tiny centroid table; same cosine fold the oracle replays)
-    qc = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("__cd", cosine(F.col("__qv"), F.col("centroid_vec")))
+    cand = (
+        _probes(queries, cent_df, n_probe, id_col, vec_col)
+        .join(codes, "centroid")
+        .select("query_id", "__nid", *[F.col(f"__c{s}") for s in range(m)])
     )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("__cd"), F.asc("centroid"))
-    probes = (
-        qc.withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= n_probe)
-        .select("query_id", "centroid")
-    )
-
-    qrows = queries.select(id_col, vec_col).collect()
-    lut_rows = {s: [] for s in range(m)}
-    for r in qrows:
-        v = [float(x) for x in r[vec_col]]
-        acc = 0.0
-        for x in v:
-            acc += x * x
-        n = math.sqrt(acc)
-        n = n if n > 1e-12 else 1e-12
-        nv = [x / n for x in v]
-        for s in range(m):
-            for ci, cvec in enumerate(cents[s]):
-                t = 0.0
-                for i in range(dsub):
-                    t += nv[s * dsub + i] * cvec[i]
-                lut_rows[s].append((r[id_col], ci, t))
-
-    cand = probes.join(codes, "centroid").select("query_id", "__nid", *[
-        F.col(f"__c{s}") for s in range(m)
-    ])
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("__nid"))
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+    qrows = queries.select(id_col, vec_col).collect()
+    luts = _folded_luts(qrows, cents, dsub, vec_col)
     qid_type = queries.schema[id_col].dataType
     for s in range(m):
         lut_schema = StructType([
@@ -1540,39 +1444,20 @@ def cosine_topk_ivfpq_fixed(
             StructField(f"__c{s}", IntegerType()),
             StructField(f"__l{s}", DoubleType()),
         ])
-        lut_df = spark.createDataFrame(lut_rows[s], lut_schema)
+        lut_df = spark.createDataFrame(
+            [
+                (r[id_col], ci, t)
+                for r, lut_q in zip(qrows, luts)
+                for ci, t in enumerate(lut_q[s])
+            ],
+            lut_schema,
+        )
         cand = cand.join(F.broadcast(lut_df), ["query_id", f"__c{s}"])
     score = F.col("__l0")
     for s in range(1, m):
         score = score + F.col(f"__l{s}")
     long = cand.select("query_id", "__nid", score.alias("adc_score"))
-
-    shortlist = shortlist_mult * k
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("__nid")
-    )
-    short = (
-        long.withColumn("__r", F.row_number().over(ws))
-        .filter(F.col("__r") <= shortlist)
-        .select("query_id", "__nid")
-    )
-    cvec = corpus.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__cv"))
-    qvec = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    rer = (
-        short.join(cvec, "__nid")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            F.col("__nid").alias("neighbor_id"),
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return rer.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rerank(long, queries, corpus, k, shortlist_mult * k, id_col, vec_col)
 
 
 def topk_recall(
@@ -1642,8 +1527,6 @@ def cluster_balanced_sample(
     per-cluster top-k (WindowGroupLimit pushes the cap below the
     sort), shuffling (centroid, hash) keys only.
     """
-    from pyspark.sql import Window
-
     if cap < 1:
         raise ValueError(f"cluster_balanced_sample: need cap >= 1, got {cap}")
     assigned, _ = index
@@ -1678,8 +1561,6 @@ def hard_negatives(
     query batch × corpus scan with a rank-pruned window (the label
     filter prunes before the sort); the corpus never self-joins.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("__ql"),
@@ -1702,9 +1583,4 @@ def hard_negatives(
         )
         .select("query_id", "neighbor_id", "neighbor_label", cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, k, "cos_sim", "neighbor_id")

@@ -162,6 +162,9 @@ def test_pq_result_invariant_under_partitioning(embeddings):
         return {(r[0], r[1], r[2]) for r in rows}
 
     assert run(3) == run(17)
+
+
+def test_pq_codes_shape_and_determinism(embeddings):
     """Codes are m small ints per vector (the 8-byte index invariant)
     and encoding is deterministic across physical layouts."""
     from ppack_spark.operators.ann import pq_encode, pq_train
@@ -230,17 +233,18 @@ def test_pq_encode_null_and_empty_vectors(spark, embeddings):
 def test_pq_self_hit_excluded_before_shortlist(embeddings):
     """A query that is a corpus member must not see itself at rank 1
     by default; with exclude_self=False (cross-namespace contract) the
-    self id IS a legitimate neighbor and comes back at cos 1.0."""
-    from ppack_spark.operators.ann import cosine_topk_pq
+    self id IS a legitimate neighbor and comes back at cos 1.0. Both
+    scan paths drop the self-hit before the shortlist and nowhere
+    after it, so this is the only guard on their exclusion."""
+    from ppack_spark.operators.ann import cosine_topk_ivfpq, cosine_topk_pq
 
     q = embeddings.filter(F.col("vec_id") == 3)
-    top = cosine_topk_pq(q, embeddings, k=5, shortlist_mult=2).collect()
-    assert all(r["neighbor_id"] != 3 for r in top)
-    kept = cosine_topk_pq(
-        q, embeddings, k=5, shortlist_mult=2, exclude_self=False
-    ).collect()
-    r1 = [r for r in kept if r["rank"] == 1][0]
-    assert r1["neighbor_id"] == 3 and r1["cos_sim"] == 1.0
+    for fn in (cosine_topk_pq, cosine_topk_ivfpq):
+        top = fn(q, embeddings, k=5, shortlist_mult=2).collect()
+        assert top and all(r["neighbor_id"] != 3 for r in top), fn.__name__
+        kept = fn(q, embeddings, k=5, shortlist_mult=2, exclude_self=False).collect()
+        r1 = [r for r in kept if r["rank"] == 1][0]
+        assert r1["neighbor_id"] == 3 and r1["cos_sim"] == 1.0, fn.__name__
 
 
 def test_semantic_dedup_planted_duplicates(spark, embeddings):

@@ -5,8 +5,9 @@ with the ``explain("formatted")`` output.
 Each gate prints one line: the min time, then the fastest sample's
 Spark job count (delta of the scheduler's next job id, construction
 included) and plan fingerprint (sha1 of the optimized plan with the
-``#<n>`` expression ids stripped), so two checkouts' lines show at a
-glance whether a change kept the plan and the jobs.
+``#<n>`` expression ids stripped and the lambda variables renumbered,
+see ``_normalize``), so two checkouts' lines show at a glance whether
+a change kept the plan and the jobs.
 
 Usage::
 
@@ -29,6 +30,20 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+def _normalize(plan: str) -> str:
+    """The plan with its run-dependent names made canonical: ``#<n>``
+    expression ids are stripped, and lambda variables, which PySpark
+    names ``x_<n>`` / ``y_<n>`` / ``z_<n>`` from a JVM-wide counter, are
+    renumbered in order of first appearance (``x_35`` -> ``x_0``)."""
+    plan = re.sub(r"#\d+", "", plan)
+    names: dict[str, str] = {}
+
+    def _renumber(m: re.Match) -> str:
+        return names.setdefault(m.group(0), f"{m.group(1)}_{len(names)}")
+
+    return re.sub(r"\b([xyz])_\d+\b", _renumber, plan)
 
 
 def main() -> None:
@@ -79,8 +94,9 @@ def main() -> None:
             )
         spark.sparkContext.setJobDescription(None)
         best, jobs, df = min(samples, key=lambda s: s[0])
-        plan = re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
-        fp = hashlib.sha1(plan.encode()).hexdigest()[:12]
+        fp = hashlib.sha1(
+            _normalize(df._jdf.queryExecution().optimizedPlan().toString()).encode()
+        ).hexdigest()[:12]
         print(
             f"{name}: min {best:.3f}s  jobs {jobs}  plan {fp}  "
             f"samples {[round(s[0], 3) for s in samples]}"
