@@ -157,6 +157,22 @@ def _rerank(
     return _topk(rer, k, "cos_sim", "neighbor_id")
 
 
+def _empty_topk(queries: DataFrame, corpus: DataFrame, id_col: str) -> DataFrame:
+    """The (query_id, neighbor_id, cos_sim, rank) result of an empty
+    query set, for the paths that collect queries to the driver and
+    cannot build a lookup table from none. Neighbor ids come from the
+    CORPUS side: query and corpus id types may differ, and the schema
+    must match the non-empty path's."""
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    return queries.sparkSession.createDataFrame([], StructType([
+        StructField("query_id", queries.schema[id_col].dataType),
+        StructField("neighbor_id", corpus.schema[id_col].dataType),
+        StructField("cos_sim", DoubleType()),
+        StructField("rank", IntegerType()),
+    ]))
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -966,6 +982,8 @@ def cosine_topk_pq(
     )
 
     qrows = queries.select(id_col, vec_col).collect()
+    if not qrows:
+        return _empty_topk(queries, corpus, id_col)
     qids = np.asarray([r[id_col] for r in qrows])
     lut = _numpy_luts(qrows, codebooks, vec_col)
     mm = codebooks.shape[0]
@@ -1066,6 +1084,8 @@ def cosine_topk_ivfpq(
     )
 
     qrows = queries.select(id_col, vec_col).collect()
+    if not qrows:
+        return _empty_topk(queries, corpus, id_col)
     lut = _numpy_luts(qrows, codebooks, vec_col)
     mm = codebooks.shape[0]
     qindex = {r[id_col]: i for i, r in enumerate(qrows)}
@@ -1323,23 +1343,7 @@ def cosine_topk_pq_fixed(
     # for (or double-train) codebooks just to return an empty result.
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, StructField, StructType,
-        )
-
-        # neighbor ids come from the CORPUS side — query and corpus id
-        # types may differ, and the empty-path schema must match the
-        # non-empty path's (query_id from queries, neighbor_id from
-        # corpus)
-        qid_type = queries.schema[id_col].dataType
-        nid_type = corpus.schema[id_col].dataType
-        empty_schema = StructType([
-            StructField("query_id", qid_type),
-            StructField("neighbor_id", nid_type),
-            StructField("cos_sim", DoubleType()),
-            StructField("rank", IntegerType()),
-        ])
-        return queries.sparkSession.createDataFrame([], empty_schema)
+        return _empty_topk(queries, corpus, id_col)
 
     codebooks = pq_train_fixed(
         corpus, m=m, k=n_centroids, dims=dims, iters=iters,

@@ -731,6 +731,13 @@ def near_dup_components(
     the shingle→signature map pass, the banded candidate join, and
     the verify stage are written once. See :func:`near_dedup_corpus`
     for the parameter semantics and the 100 TB scale shape.
+
+    Scale note: ``df`` is read by :func:`~ppack_spark.operators.util.spread`'s
+    partition probe, by the signature checkpoint, and by every consumer
+    that joins back to it, so a ``df`` whose plan has shuffles runs
+    them once per read. Give it a scan or a cut
+    (``df.localCheckpoint(eager=False)``), as ``CorpusPipeline.run``
+    does.
     """
     from .cluster import connected_components
 

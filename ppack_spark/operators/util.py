@@ -113,8 +113,15 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     signature-computation stage to a single core. When the input has
     fewer partitions than the cluster's default parallelism,
     round-robin repartition up to it — the shuffle of the raw input is
-    cheap relative to the per-row work it unlocks. At real scale
-    (thousands of splits) this is a no-op.
+    cheap relative to the per-row work it unlocks.
+
+    The ``getNumPartitions()`` probe is free on a scan or a cut, but on
+    a plan with shuffles AQE runs those shuffle stages to learn the
+    final partitioning and then discards them, so the caller's action
+    runs them again. Pass a scan or a cut (``localCheckpoint``), as
+    ``CorpusPipeline.run`` does before near dedup; see
+    :func:`~ppack_spark.operators.dedup.near_dup_components` for the
+    scale note.
     """
     target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

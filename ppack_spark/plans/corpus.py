@@ -1,7 +1,9 @@
 """CorpusPipeline — the corpus-preparation counterpart of
 :class:`~ppack_spark.plans.linker.Linker`: a declarative spec of the
-standard raw-crawl → training-shard stage sequence, compiled into ONE
-lazy DataFrame plan per run.
+standard raw-crawl → training-shard stage sequence. With near dedup or
+a leakage-safe split on, ``run()`` executes the pre-near-dedup prefix
+once (a local checkpoint where the near-dup chain fans out) and the
+near-dup components at call time; the stages after them stay lazy.
 
 Stage order (each optional, every stage an already-gated operator):
 
@@ -15,12 +17,15 @@ Stage order (each optional, every stage an already-gated operator):
     train/val/test split (id-hash or leakage-safe cluster-hash) →
     chunk → pack → shuffle | curriculum
 
-The facade only fixes composition order and threads the column names;
-there is deliberately no hidden state — ``run()`` returns a plain
-DataFrame, and every stage can still be called directly for custom
-chains. Near dedup and the samplers keep their documented scale
-shapes (bucketed LSH with signature verify, salted md5 selectors);
-chunk/pack/shuffle produce the trainer-facing columns
+The facade only fixes composition order, threads the column names and
+places that cut: right before near dedup, or right before a
+leakage-safe split that computes its own components. The near-dup
+chain reads its input three times, so without the cut the prefix's
+shuffles run three times. ``run()`` returns a plain DataFrame whose
+rows equal the hand-built chain's, and every stage can still be called
+directly for custom chains. Near dedup and the samplers keep their
+documented scale shapes (bucketed LSH with signature verify, salted
+md5 selectors); chunk/pack/shuffle produce the trainer-facing columns
 (chunk_id/chunk_text, seq_id/seq_offset, shard/shard_pos) that
 ``write_sharded`` then materializes.
 """
@@ -91,7 +96,9 @@ class CorpusSpec:
 
 class CorpusPipeline:
     """Compose the corpus-preparation stages declared in a
-    :class:`CorpusSpec` into one lazy plan.
+    :class:`CorpusSpec`. With near dedup or a leakage-safe split on,
+    ``run()`` executes the pre-near-dedup prefix once and the near-dup
+    components at call time; the rest of the plan stays lazy.
 
     >>> spec = CorpusSpec(near_dedup={"num_hashes": 128, "band_size": 8},
     ...                   chunk={"chunk_tokens": 1024},
@@ -159,8 +166,13 @@ class CorpusPipeline:
         # (strictly better than re-clustering the deduped corpus,
         # where the clusters are gone: a future re-crawl of a dropped
         # near-copy still lands in the same split)
+        #
+        # The near-dup chain reads its input three times (spread()'s
+        # partition probe, the signature checkpoint, the final
+        # anti-join or split join): cut the prefix so it runs once.
         shared_comps = None
         if s.near_dedup is not None:
+            out = out.localCheckpoint(eager=False)
             nd = dict(s.near_dedup)
             score_col = nd.pop("score_col", None)
             if s.split is not None and s.split.get("leakage_safe"):
@@ -203,6 +215,8 @@ class CorpusPipeline:
                 sp = {k: v for k, v in s.split.items() if k != "leakage_safe"}
                 if shared_comps is not None:
                     sp["components"] = shared_comps
+                else:  # the split computes its own components: cut as above
+                    out = out.localCheckpoint(eager=False)
                 out = split_corpus_leakage_safe(
                     out, text_col=s.text_col, id_col=s.id_col, **sp
                 )

@@ -247,6 +247,26 @@ def test_pq_self_hit_excluded_before_shortlist(embeddings):
         assert r1["neighbor_id"] == 3 and r1["cos_sim"] == 1.0, fn.__name__
 
 
+def test_empty_queries_over_nonempty_corpus(embeddings):
+    """Every query path returns an empty top-k frame for a query set
+    that matches nothing, while the corpus still trains its index —
+    the driver-side lookup tables must not be built from zero rows."""
+    from ppack_spark.operators.ann import (
+        cosine_topk_ivf,
+        cosine_topk_ivfpq,
+        cosine_topk_ivfpq_fixed,
+        cosine_topk_pq,
+        cosine_topk_pq_fixed,
+    )
+
+    q = embeddings.filter(F.col("vec_id") < 0)
+    for fn in (cosine_topk_ivf, cosine_topk_pq, cosine_topk_ivfpq,
+               cosine_topk_pq_fixed, cosine_topk_ivfpq_fixed):
+        out = fn(q, embeddings, k=5)
+        assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rank"], fn.__name__
+        assert out.count() == 0, fn.__name__
+
+
 def test_semantic_dedup_planted_duplicates(spark, embeddings):
     """SemDeDup drops planted near-identical embeddings and keeps the
     originals; distinct vectors all survive. Exercises BOTH bucketing

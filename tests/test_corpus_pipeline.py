@@ -178,3 +178,57 @@ def test_span_decontaminate_stage_equals_manual(spark, docs):
     skipped = CorpusPipeline(spec).run(docs)  # no eval_docs: stage off
     assert "n_tokens_removed" not in skipped.columns
     assert skipped.count() > 0
+
+
+def _assert_reads_through_cut(out) -> None:
+    """No leaf of the optimized plan scans the corpus or the eval docs
+    file, and one leaf is the cut (a checkpointed ``LogicalRDD``)."""
+    leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+    kinds, scanned = [], []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kinds.append(leaf.getClass().getSimpleName())
+        if kinds[-1] == "LogicalRelation":
+            scanned.append(leaf.relation().location().rootPaths().mkString(","))
+    assert "LogicalRDD" in kinds, kinds
+    assert not any("documents.parquet" in p or "eval_docs.parquet" in p
+                   for p in scanned), scanned
+
+
+def test_near_dup_chain_reads_the_prefix_through_one_cut(spark, docs, tmp_path):
+    """The near-dup chain reads its input three times (spread's
+    partition probe, the signature checkpoint, the final anti-join and
+    split join). With near dedup plus a leakage-safe split, and with
+    the split alone, the output must read the corpus and the eval docs
+    only through the cut, so the prefix's shuffles run once per run;
+    the split alone still equals the hand-built chain row for row."""
+    from ppack_spark.operators.pipeline import (
+        prepare_corpus,
+        split_corpus_leakage_safe,
+    )
+
+    eval_path = str(tmp_path / "eval_docs.parquet")
+    docs.filter(F.col("doc_id") % 97 == 5).select("doc_id", "text").write.parquet(eval_path)
+    evals = spark.read.parquet(eval_path)
+    split = {"weights": {"train": 0.8, "test": 0.2}, "leakage_safe": True,
+             "num_hashes": 32, "band_size": 4, "verify_threshold": 0.6}
+    both = CorpusSpec(
+        near_dedup={"num_hashes": 32, "band_size": 4, "verify_threshold": 0.6},
+        split=split, shuffle=None,
+    )
+    out = CorpusPipeline(both).run(docs, eval_docs=evals)
+    _assert_reads_through_cut(out)
+    assert out.count() > 0
+
+    got = CorpusPipeline(CorpusSpec(split=split, shuffle=None)).run(
+        docs, eval_docs=evals
+    )
+    _assert_reads_through_cut(got)
+    sp = {k: v for k, v in split.items() if k != "leakage_safe"}
+    manual = split_corpus_leakage_safe(
+        prepare_corpus(docs, eval_docs=evals), **sp
+    )
+    assert got.columns == manual.columns
+    g = [r.asDict() for r in got.collect()]
+    w = {r["doc_id"]: r.asDict() for r in manual.collect()}
+    assert {r["doc_id"]: r for r in g} == w and len(g) == len(w) > 0

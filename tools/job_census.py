@@ -5,8 +5,9 @@
 Run from the repository root. Sets up the workload exactly as
 ``perfbench/run.py`` does (same inputs for the seed, same session
 settings), runs ONE operation with a job group per public call —
-``estimate``, ``score``, ``cluster`` on the linkage workloads, ``op``
-on the others — and prints every job of those groups from the status
+``estimate``, ``score``, ``cluster`` on the linkage workloads, ``build``
+(``CorpusPipeline.run``) and ``sink`` (the parquet write) on
+``corpus_prepare`` — and prints every job of those groups from the status
 store's job list: id, group, task count and call site, then the job
 count per group. Comparing the listings of repeated runs names the jobs
 that come and go between them. perfbench is imported, never changed.
@@ -26,8 +27,12 @@ sys.path.insert(0, ROOT)
 
 def _phases(wl):
     """``(group, call)`` pairs that together make one ``wl.op()``."""
-    if not hasattr(wl, "linker"):
-        return [("op", wl.op)]
+    if not hasattr(wl, "linker"):  # corpus_prepare: op() is _write(_run())
+        built = []
+        return [
+            ("build", lambda: built.append(wl._run())),
+            ("sink", lambda: wl._write(built[0])),
+        ]
     lk = wl.linker()
     return [
         ("estimate", lk.estimate),
